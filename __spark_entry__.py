@@ -95,8 +95,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(multimodal.QUERIES)
     # r11: singleton slots go through the central analyzed-plan memo
     # (sources/tables.plan_memoized — construction is a real per-call
-    # cost; every execution still recomputes from parquet). Suites keep
-    # their own _SUITE_PLAN_CACHE.
+    # cost; every execution still recomputes from parquet). Suites memo
+    # their sub-plans in the same registry, without the job guard.
     q = {name: plan_memoized(name, fn) for name, fn in q.items()}
     q.update(suites.QUERIES)
     return {name: q[name] for name in GATE_ORDER}

@@ -30,14 +30,15 @@ class RequestMetrics:
     log_request hook (/root/reference/cdcagg_oai/metrics.py:224-246):
     totals, per-user-agent counts, success/failure split, and durations
     (ms) labeled by (verb, metadataPrefix) — durations recorded only for
-    successful non-error OAI responses."""
+    successful non-error OAI responses. Each duration label keeps a
+    running ``[sum_ms, count]``, so memory stays fixed under traffic."""
 
     def __init__(self):
         self.requests_total = 0
         self.requests_succeeded = 0
         self.requests_failed = 0
         self.requests_per_user_agent: dict[str, int] = {}
-        self.requests_duration: dict[tuple[str, str | None], list[float]] = {}
+        self.requests_duration: dict[tuple[str, str | None], list] = {}
 
     def record(self, verb, metadata_prefix, user_agent, duration_ms, is_error):
         self.requests_total += 1
@@ -50,8 +51,10 @@ class RequestMetrics:
             self.requests_failed += 1
         else:
             self.requests_succeeded += 1
-            self.requests_duration.setdefault((verb, metadata_prefix), []).append(
-                duration_ms)
+            acc = self.requests_duration.setdefault((verb, metadata_prefix),
+                                                    [0.0, 0])
+            acc[0] += duration_ms
+            acc[1] += 1
 
 
 class OAIFacade:

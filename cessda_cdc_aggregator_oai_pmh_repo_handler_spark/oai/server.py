@@ -40,16 +40,16 @@ def _request_metric_lines(rm) -> str:
     for ua, n in sorted(rm.requests_per_user_agent.items()):
         ua_esc = ua.replace('"', '\\"')
         lines.append(f'requests_per_user_agent{{harvester="{ua_esc}"}} {float(n)}')
-    for (verb, prefix), durs in sorted(
+    for (verb, prefix), (total_ms, count) in sorted(
             rm.requests_duration.items(),
             key=lambda kv: (str(kv[0][0]), str(kv[0][1]))):
         lines.append(
             f'requests_duration_ms_sum{{verb="{verb}",metadataPrefix="{prefix or ""}"}} '
-            f"{round(sum(durs), 3)}"
+            f"{round(total_ms, 3)}"
         )
         lines.append(
             f'requests_duration_ms_count{{verb="{verb}",metadataPrefix="{prefix or ""}"}} '
-            f"{float(len(durs))}"
+            f"{float(count)}"
         )
     return "\n".join(lines) + "\n"
 
@@ -66,36 +66,32 @@ class OAIHTTPServer:
 
             def do_GET(self):
                 parsed = urlparse(self.path)
-                if parsed.path == OAI_PATH:
-                    params = {k: v[0] for k, v in parse_qs(parsed.query).items()}
-                    verb = params.pop("verb", None)
-                    try:
+                # a request must never die responseless, and a 500 body
+                # never echoes exception text to the client
+                try:
+                    if parsed.path == OAI_PATH:
+                        params = {k: v[0] for k, v in parse_qs(parsed.query).items()}
+                        verb = params.pop("verb", None)
                         with outer._lock:
                             body = outer.facade.handle_request(
                                 verb=verb,
                                 user_agent=self.headers.get("User-Agent"),
                                 **params,
                             )
-                    except Exception as exc:  # a request must never die responseless
-                        payload = f"internal error: {exc}".encode()
-                        self.send_response(500)
-                        self.send_header("Content-Type", "text/plain")
+                        status, ctype = 200, "text/xml; charset=utf-8"
+                    elif parsed.path == METRICS_PATH:
+                        with outer._lock:
+                            gauges = compute_metrics(outer.facade.planner.studies)
+                        body = render_prometheus(gauges) + _request_metric_lines(
+                            outer.facade.request_metrics)
+                        status, ctype = 200, "text/plain; version=0.0.4"
                     else:
-                        payload = body.encode()
-                        self.send_response(200)
-                        self.send_header("Content-Type", "text/xml; charset=utf-8")
-                elif parsed.path == METRICS_PATH:
-                    with outer._lock:
-                        gauges = compute_metrics(outer.facade.planner.studies)
-                    body = render_prometheus(gauges) + _request_metric_lines(
-                        outer.facade.request_metrics)
-                    payload = body.encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "text/plain; version=0.0.4")
-                else:
-                    payload = b"not found"
-                    self.send_response(404)
-                    self.send_header("Content-Type", "text/plain")
+                        body, status, ctype = "not found", 404, "text/plain"
+                except Exception:
+                    body, status, ctype = "internal error", 500, "text/plain"
+                payload = body.encode()
+                self.send_response(status)
+                self.send_header("Content-Type", ctype)
                 self.send_header("Content-Length", str(len(payload)))
                 self.end_headers()
                 self.wfile.write(payload)

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, memo_put
+from ..sources.tables import corpus_key, corpus_memo, load_table, memoized
 from .clustering import sq_dists
 from .dedup import (BLOCK_BITS, _SIGN_SIG_SQL, _cosine_sql,
                     dot_cols, norm_col, sign_signature)
@@ -358,12 +358,6 @@ PQ_SUBDIM = 32   # 64-dim embeddings split in half
 PQ_K = 4         # codebook size per subspace
 PQ_SWEEPS = 2    # fixed Lloyd budget per codebook (deterministic)
 
-# the trained-and-ranked result is a deterministic pure function of the
-# corpus; memoized (localCheckpoint pins the 10 rows) so repeated suite
-# constructions pay the training sweeps once per (session, corpus)
-_PQ_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al., IVFADC family): train a
     tiny k-means codebook per embedding SUBSPACE, encode every vector as
@@ -387,7 +381,7 @@ def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same fixed recursion per subspace unrolled as DuckDB
     CTEs (_pq_oracle_sql), extending the kmeans_clusters verification
     pattern."""
-    return _pq_search(spark, sf_dir, cell_probe=False)
+    return _pq_search(spark, sf_dir, False)
 
 
 def q_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -398,20 +392,16 @@ def q_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained codebooks, encode pass, and determinism argument as
     ``q_pq_ann``; at 100 TB the codes table is partitioned by the coarse
     cell so the probe is partition pruning."""
-    return _pq_search(spark, sf_dir, cell_probe=True)
+    return _pq_search(spark, sf_dir, True)
 
 
+# the trained-and-ranked result is a deterministic pure function of the
+# corpus; memoized (localCheckpoint pins the 10 rows) so repeated suite
+# constructions pay the training sweeps once per (session, corpus)
+@corpus_memo(table="embeddings")
 def _pq_search(spark: SparkSession, sf_dir: str,
                cell_probe: bool) -> DataFrame:
-    import numpy as np
-
-    from ..sources.tables import corpus_key
-
     ck = corpus_key(spark, sf_dir, table="embeddings")
-    key = (*ck, cell_probe)
-    cached = _PQ_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = (load_table(spark, "embeddings", sf_dir)
          .select("vec_id", "label", "embedding").persist())
     try:
@@ -427,7 +417,7 @@ def _pq_search(spark: SparkSession, sf_dir: str,
         ranked = codes.filter(F.col("vec_id") != QUERY_VEC_ID)
         if cell_probe:
             ranked = ranked.filter(F.col("label") == qlabel)
-        out = (
+        return (
             ranked
             .select("vec_id", "label",
                     *[f"code{si}" for si in range(PQ_SUBS)],
@@ -436,28 +426,23 @@ def _pq_search(spark: SparkSession, sf_dir: str,
             .limit(TOP_K)
             .localCheckpoint()  # materialize before the unpersist below
         )
-        memo_put(_PQ_CACHE, key, out)
-        return out
     finally:
         e.unpersist()
 
 
-# trained codebooks + query vector per corpus: training is the expensive
-# part; both search variants (full and cell-probed) reuse one fit
-_PQ_MODEL_CACHE: dict = {}
-
-
 def _pq_model(spark: SparkSession, e: DataFrame, ck):
-    """Train (or fetch) the PQ codebooks for ``e``. ``ck`` must identify
-    THE TRAINING INPUT, not just the corpus file — callers training on a
-    subset (e.g. a bootstrap slice) pass ``ck=None`` to bypass the cache
-    entirely, otherwise a subset-trained model would be served to (or
-    poisoned by) the full-corpus gate queries sharing the corpus key."""
+    """Train (or fetch) the PQ codebooks for ``e``: training is the
+    expensive part, and both search variants (full and cell-probed) reuse
+    one fit per corpus. ``ck`` must identify THE TRAINING INPUT, not just
+    the corpus file — callers training on a subset (e.g. a bootstrap
+    slice) pass ``ck=None`` to bypass the cache entirely, otherwise a
+    subset-trained model would be served to (or poisoned by) the
+    full-corpus gate queries sharing the corpus key."""
     import numpy as np
 
-    cached = _PQ_MODEL_CACHE.get(ck) if ck is not None else None
-    if cached is not None:
-        return cached
+    if ck is not None:
+        return memoized((*ck, "ann._pq_model"),
+                        lambda: _pq_model(spark, e, None))
     seeds = e.orderBy("vec_id").limit(PQ_K).collect()
     qrows = (e.filter(F.col("vec_id") == QUERY_VEC_ID)
              .select("embedding", "label").collect())
@@ -487,8 +472,6 @@ def _pq_model(spark: SparkSession, e: DataFrame, ck):
             cents[si] = np.asarray(
                 [s[i] / n[i] if n[i] else cents[si][i]
                  for i in range(PQ_K)])
-    if ck is not None:
-        memo_put(_PQ_MODEL_CACHE, ck, (cents, qvec, qlabel))
     return cents, qvec, qlabel
 
 
@@ -648,24 +631,16 @@ BM25_MAX_DF_FRAC = 0.6
 # (one explode + one (doc, term) shuffle) and shared by the probe and the
 # df aggregation across repeated gate/bench runs, the in-session analogue
 # of the persisted index table streaming/index_stream maintains
-_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def _postings_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import corpus_key
     from .text_analysis import _tokenized_docs
 
-    key = corpus_key(spark, sf_dir)
-    p = _POSTINGS_CACHE.get(key)
-    if p is None:
-        d = _tokenized_docs(spark, sf_dir)
-        p = (
-            d.select("doc_id", F.explode("words").alias("term"))
-            .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-            .localCheckpoint()
-        )
-        memo_put(_POSTINGS_CACHE, key, p)
-    return p
+    d = _tokenized_docs(spark, sf_dir)
+    return (
+        d.select("doc_id", F.explode("words").alias("term"))
+        .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint()
+    )
 
 
 def bm25_score_expr() -> F.Column:

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import corpus_key, load_table, local_rows, memo_put
+from ..sources.tables import corpus_memo, load_table, local_rows
 
 
 def q_array_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1762,11 +1762,8 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # #2): q_markov_stationary, q_markov_attribution and q_transition_entropy
 # all build K² transition counts from the SAME corpus pass; memoize the
 # counts so a suite run pays the pass (and its checkpoint launch train)
-# once. Keyed by (session, events-corpus ident); registered in
-# sources.tables.clear_corpus_caches for cold-bench isolation.
-_MARKOV_SPINE_CACHE: dict = {}
-
-
+# once. Keyed by (session, events-corpus ident).
+@corpus_memo(table="events")
 def _markov_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tagged transition-count spine: (variant, i, j, c) with
     variant='all' = every consecutive per-user (prev→next) event-type
@@ -1792,10 +1789,6 @@ def _markov_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator."""
     from pyspark.sql import Window
 
-    key = corpus_key(spark, sf_dir, "events")
-    hit = _MARKOV_SPINE_CACHE.get(key)
-    if hit is not None:
-        return hit
     e = load_table(spark, "events", sf_dir)
     s = F.unix_timestamp("ts").cast("long")
     d = e.select("user_id", "event_id", s.alias("s"), "event_type")
@@ -1828,7 +1821,6 @@ def _markov_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p.variant", "p.i", "p.j")
         .agg(F.count(F.lit(1)).alias("c"))
         .coalesce(1).localCheckpoint())
-    memo_put(_MARKOV_SPINE_CACHE, key, spine)
     return spine
 
 

@@ -34,16 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import corpus_key, memo_put
+from ..sources.tables import corpus_memo
 from .text_analysis import _tokenized_docs
 
 BPE_MERGES = 8
-
-# the learned merge table is a deterministic pure function of the corpus;
-# memoized per (session, corpus-file identity) so repeated suite
-# constructions pay the 17-job loop once, and an in-place corpus
-# regeneration invalidates the entry (corpus_key contract)
-_BPE_CACHE: dict[tuple[str, str], tuple[list[tuple], DataFrame]] = {}
 
 
 def _char_symbols(word):
@@ -142,22 +136,21 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows, "rank int, a string, b string, merged string, freq long")
 
 
+@corpus_memo(table="documents")
 def _trained(spark: SparkSession, sf_dir: str):
     """Memoized (merge rows, final word-symbol table): both gate queries
     share one training run; the checkpointed word table also serves the
-    tokenizer-apply path without re-running the folds."""
-    key = corpus_key(spark, sf_dir)
-    entry = _BPE_CACHE.get(key)
-    if entry is None:
-        d = _tokenized_docs(spark, sf_dir)
-        merges, wf = bpe_train(spark, d.select("words"))
-        vocab = (wf.select(F.explode("symbols").alias("s"))
-                 .agg(F.countDistinct("s").alias("n")).collect()[0]["n"])
-        rows = [(r, a, b, m, c) for (r, a, b, m, c) in merges]
-        rows.append((0, "", "", "<vocab>", int(vocab)))
-        entry = (rows, wf)
-        memo_put(_BPE_CACHE, key, entry)
-    return entry
+    tokenizer-apply path without re-running the folds. The merge table is
+    a deterministic pure function of the corpus, so repeated suite
+    constructions pay the 17-job loop once per (session, corpus), and an
+    in-place corpus regeneration invalidates the entry."""
+    d = _tokenized_docs(spark, sf_dir)
+    merges, wf = bpe_train(spark, d.select("words"))
+    vocab = (wf.select(F.explode("symbols").alias("s"))
+             .agg(F.countDistinct("s").alias("n")).collect()[0]["n"])
+    rows = [(r, a, b, m, c) for (r, a, b, m, c) in merges]
+    rows.append((0, "", "", "<vocab>", int(vocab)))
+    return rows, wf
 
 
 def _sql_str(s: str) -> str:

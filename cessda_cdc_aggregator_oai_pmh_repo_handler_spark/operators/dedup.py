@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import corpus_key, load_table, local_rows, memo_put
+from ..sources.tables import corpus_memo, load_table, local_rows
 
 N_PERMS = 8
 N_BANDS = 4          # 2 rows per band
@@ -95,9 +95,7 @@ def _parallel_docs(spark: SparkSession, sf_dir: str, table: str = "documents") -
     )
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized (doc_id → shingles) relation, computed once per
     (session, sf_dir) and shared by every consumer in this module.
@@ -110,10 +108,6 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side; at 100 TB the equivalent is a doc_id-bucketed shingle
     table written once by the first pass and reused by every dedup job —
     this cache is that materialization in local form."""
-    key = corpus_key(spark, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = _parallel_docs(spark, sf_dir)
     sh = shingles_col()
     # pre-filter on word count, NOT on size(shingles): a filter above the
@@ -125,13 +119,10 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", sh.alias("shingles"))
         .localCheckpoint()
     )
-    memo_put(_SHINGLE_CACHE, key, docs)
     return docs
 
 
-_VERIFIED_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash → LSH band buckets → candidate pairs → exact-Jaccard verify.
     Returns (doc_a, doc_b, jaccard) for verified near-duplicates.
@@ -143,12 +134,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     job, exactly like the component table derived from it.
     ``build_minhash_lsh_pairs`` is the raw plan (tests/test_plans.py
     asserts its join shape there, which the checkpoint here would hide)."""
-    key = corpus_key(spark, sf_dir)
-    cached = _VERIFIED_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     out = build_minhash_lsh_pairs(spark, sf_dir).localCheckpoint()
-    memo_put(_VERIFIED_PAIRS_CACHE, key, out)
     return out
 
 
@@ -362,15 +348,9 @@ SIMHASH_CHUNKS = 4  # 16 bits split into 4 chunks of 4
 # — the last eager-build train left in a query path (one job per
 # construction, paid by q_simhash_pairs AND capture_recapture, which
 # rebuilds it). Memoized per (session, corpus) like every other
-# checkpointed relation; registered in clear_corpus_caches.
-_SIMHASH_DOCS_CACHE: dict = {}
-
-
+# checkpointed relation.
+@corpus_memo(table="documents")
 def _simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = corpus_key(spark, sf_dir)
-    hit = _SIMHASH_DOCS_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = (
         _shingled_docs(spark, sf_dir)
         .filter(F.col("doc_id") < 200)
@@ -378,7 +358,6 @@ def _simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # barrier: every chunk row and both join sides reuse one simhash pass
         .localCheckpoint()
     )
-    memo_put(_SIMHASH_DOCS_CACHE, key, docs)
     return docs
 
 
@@ -652,9 +631,7 @@ def connected_components_local(edge_rows) -> list[tuple[int, int]]:
     return sorted((x, find(x)) for x in parent)
 
 
-_COMPONENTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the verified
     MinHash pair graph.
@@ -676,10 +653,6 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaning funnel (``q_clean_corpus``) consumes exactly this labelling —
     at 100 TB the component table is written once per corpus snapshot and
     read by every curation job, not recomputed per consumer."""
-    key = corpus_key(spark, sf_dir)
-    cached = _COMPONENTS_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = q_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     # one probe job: fetch cap+1 rows; a full result under the cap means the
     # graph is driver-sized and union-find answers exactly in O(E α(E))
@@ -690,7 +663,6 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = spark.createDataFrame(comp, "doc_id long, component long")
     else:
         out = connected_components_distributed(pairs)
-    memo_put(_COMPONENTS_CACHE, key, out)
     return out
 
 
@@ -736,9 +708,7 @@ def connected_components_distributed(pairs: DataFrame) -> DataFrame:
 PR_DAMPING = 0.85
 PR_ITERS = 3
 
-_PAGERANK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def q_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the verified near-duplicate graph — the second graph
     operator next to connected components: rank documents by how central
@@ -758,12 +728,7 @@ def q_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — every downstream consumer reads it, none re-runs the power
     iteration. ``build_pagerank_neardup`` is the raw iteration plan (what
     tools/plan_audit.py explains)."""
-    key = corpus_key(spark, sf_dir)
-    cached = _PAGERANK_CACHE.get(key)
-    if cached is not None:
-        return cached
     out = build_pagerank_neardup(spark, sf_dir).localCheckpoint()
-    memo_put(_PAGERANK_CACHE, key, out)
     return out
 
 
@@ -1104,9 +1069,7 @@ MAX_HOPS = 8  # BFS depth bound: near-dup cluster diameters are tiny (a
               # ceiling and the frontier loop exits as soon as a sweep
               # discovers nothing new (typically after 2-3).
 
-_HOPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def q_neardup_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS shortest-path hop distance from each near-dup cluster's
     CANONICAL document — the third graph operator next to connected
@@ -1128,10 +1091,6 @@ def q_neardup_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB is written once per corpus snapshot next to the component
     table. The oracle recomputes the same BFS as a DuckDB recursive CTE
     seeded by its own canonical-selection mirror."""
-    key = corpus_key(spark, sf_dir)
-    cached = _HOPS_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = q_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"),
@@ -1160,7 +1119,6 @@ def q_neardup_hop_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         settled = settled.unionByName(newly).localCheckpoint()
         frontier = newly
-    memo_put(_HOPS_CACHE, key, settled)
     return settled
 
 
@@ -1273,17 +1231,11 @@ KCORE_KS = (2, 3)
 KCORE_PEELS = 4
 
 
-_KCORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo(table="documents")
 def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The KCORE_PEELS-round peeled, k-tagged edge relation (the
     fixed-depth peel both engines replay), memoized per (session,
     corpus) like the components/pairs relations it derives from."""
-    key = corpus_key(spark, sf_dir)
-    cached = _KCORE_CACHE.get(key)
-    if cached is not None:
-        return cached
     pairs = q_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
     ks = spark.createDataFrame([(k,) for k in KCORE_KS], ["k"])
     e = (pairs.crossJoin(F.broadcast(ks))
@@ -1301,7 +1253,6 @@ def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "left_semi")
              .select("k", "a", "b")
              .coalesce(1).localCheckpoint())
-    memo_put(_KCORE_CACHE, key, e)
     return e
 
 
@@ -1327,7 +1278,7 @@ def q_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     textrank discipline: Spark does not dedupe common subtrees and a
     lazy peel tree re-executes lower rounds ~4^depth times). The peeled
     edge relation is memoized per (session, corpus) — the
-    _COMPONENTS_CACHE pattern: the peel's checkpoint launch train
+    neardup_components pattern: the peel's checkpoint launch train
     (~19 jobs / 1.2 s at sf0.1) runs once per corpus, not per call (r10
     optimization; cold-bench isolation clears it like every memo)."""
     e = _kcore_edges(spark, sf_dir)

@@ -31,6 +31,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 from collections.abc import Iterator
@@ -39,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources.tables import corpus_memo
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -625,9 +628,6 @@ def _decode(payload: bytes) -> list[float]:
     return _decode_fake(payload)  # raises the canonical NotImplementedError
 
 
-_MEDIA_REAL_CACHE: dict = {}
-
-
 def _audio_payload(i: int, n_samples: int) -> tuple[bytes, str]:
     """Audio fixture codec rotation by i%8: PCM16-or-float32 WAV (1,
     split by i%16 — both carry identical samples, float32 storage is
@@ -728,6 +728,7 @@ def _fixture_row(i: int) -> tuple:
              "n_frames": None})
 
 
+@corpus_memo(table=None)
 def synthetic_media_real(spark: SparkSession, n: int = 64) -> DataFrame:
     """Media table carrying REAL encoded bytes: images rotate binary PPM,
     zlib-compressed RGB PNG, entropy-coded JPEG (baseline and
@@ -735,11 +736,6 @@ def synthetic_media_real(spark: SparkSession, n: int = 64) -> DataFrame:
     IMA ADPCM, and G.711 µ-law; video ids carry MJPEG AVI clips and
     animated GIFs. All built by ``_fixture_row`` — the same helper the
     oracle mirror runs."""
-    from ..sources.tables import session_key
-
-    cached = _MEDIA_REAL_CACHE.get((session_key(spark), n))
-    if cached is not None:
-        return cached
     rows = [_fixture_row(i) for i in range(n)]
     # A driver-built demo table parallelizes into one slice per core — for
     # 64 rows that is 32 near-empty Arrow batches, each paying a Python
@@ -751,10 +747,8 @@ def synthetic_media_real(spark: SparkSession, n: int = 64) -> DataFrame:
     # JVM-resident blocks — without it every action re-ran the Python-
     # worker deserialization of the pickled row RDD (the pii_scrub
     # finding: the fixture scan, not the codecs, was the per-call tax)
-    df = (spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
-          .localCheckpoint())
-    _MEDIA_REAL_CACHE[(session_key(spark), n)] = df
-    return df
+    return (spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
+            .localCheckpoint())
 
 
 def _feature(values: list[float]) -> list[float]:
@@ -941,9 +935,7 @@ def _expected_feature_rollup() -> list[tuple]:
 
 QUERIES = {"multimodal_features": q_multimodal_features}
 
-_ORACLE_CACHE: dict[str, str] | None = None
-
-
+@functools.cache
 def oracles() -> dict[str, str]:
     """Oracle SQL for the gate, built LAZILY on first call (memoized).
 
@@ -951,18 +943,15 @@ def oracles() -> dict[str, str]:
     (JPEG/PPM/PNG/WAV), so it must never execute at module import time:
     a codec regression should fail exactly the ``multimodal_features``
     gate row, not the whole-engine import (round-4 post-mortem)."""
-    global _ORACLE_CACHE
-    if _ORACLE_CACHE is None:
-        _ORACLE_CACHE = {
-            "multimodal_features": "SELECT * FROM (VALUES "
-            + ", ".join(
-                f"('{k}', CAST({n} AS BIGINT), CAST({tv} AS BIGINT), "
-                f"CAST({am} AS DOUBLE), CAST({af} AS DOUBLE))"
-                for k, n, tv, am, af in _expected_feature_rollup()
-            )
-            + ") AS t(kind, n_media, total_values, avg_mean, avg_feature_sum)",
-        }
-    return _ORACLE_CACHE
+    return {
+        "multimodal_features": "SELECT * FROM (VALUES "
+        + ", ".join(
+            f"('{k}', CAST({n} AS BIGINT), CAST({tv} AS BIGINT), "
+            f"CAST({am} AS DOUBLE), CAST({af} AS DOUBLE))"
+            for k, n, tv, am, af in _expected_feature_rollup()
+        )
+        + ") AS t(kind, n_media, total_values, avg_mean, avg_feature_sum)",
+    }
 
 
 def sample_video_frames(media: DataFrame, every_n: int) -> DataFrame:

@@ -21,6 +21,8 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import corpus_memo
+
 # Order matters: emails contain dots/digits, so count/redact them before
 # IPv4; phones before bare digit runs. Each pattern is valid and
 # equivalent under BOTH Java regex and Python re.
@@ -71,30 +73,21 @@ def _pii_rows() -> list[tuple]:
     return rows
 
 
-_PII_DOCS_CACHE: dict[str, DataFrame] = {}
-
-
+@corpus_memo(table=None)
 def synthetic_pii_docs(spark: SparkSession) -> DataFrame:
     # same rationale as multimodal.synthetic_media_real: pack the demo
     # into a few real partitions instead of one near-empty slice per core.
     # Memoized per session like the real tables (sources/tables.py): the
     # driver-side createDataFrame/Arrow conversion is the expensive part
     # of this fixed fixture, not the regexes.
-    from ..sources.tables import session_key
-
-    key = session_key(spark)
-    df = _PII_DOCS_CACHE.get(key)
-    if df is None:
-        # r11: localCheckpoint pins the 24 rows as JVM-resident blocks —
-        # a python-list DataFrame is otherwise backed by an RDD of
-        # PICKLED rows, and every downstream action re-ran the
-        # Python-worker deserialization (measured: bare count 1.6 s vs
-        # 0.14 s checkpointed; the regexes were never the cost)
-        df = spark.createDataFrame(
-            _pii_rows(), "pii_id long, text string").coalesce(4) \
-            .localCheckpoint()
-        _PII_DOCS_CACHE[key] = df
-    return df
+    # r11: localCheckpoint pins the 24 rows as JVM-resident blocks —
+    # a python-list DataFrame is otherwise backed by an RDD of
+    # PICKLED rows, and every downstream action re-ran the
+    # Python-worker deserialization (measured: bare count 1.6 s vs
+    # 0.14 s checkpointed; the regexes were never the cost)
+    return spark.createDataFrame(
+        _pii_rows(), "pii_id long, text string").coalesce(4) \
+        .localCheckpoint()
 
 
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:

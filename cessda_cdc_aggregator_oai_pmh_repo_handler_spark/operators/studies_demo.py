@@ -22,25 +22,18 @@ from ..functions import derivations as D
 from ..functions import predicates as P
 from ..plans.query_builder import OAIQueryPlanner
 from ..sources.studies import fixture_studies
+from ..sources.tables import corpus_memo
 
 REQUEST_TS = "2019-12-12 07:14:38"
 
 
-_PLANNER_CACHE: dict[tuple[str, int], OAIQueryPlanner] = {}
-
-
+@corpus_memo(table=None)
 def _planner(spark: SparkSession, page_size: int = 5) -> OAIQueryPlanner:
     """Memoized per session: the four studies gate rows each built a fresh
     planner (and its set-dimension maps) per call — the r2 bench flagged
     the studies rows doubling; a planner is immutable here so one per
     (session, page_size) serves them all."""
-    from ..sources.tables import session_key
-
-    key = (session_key(spark), page_size)
-    cached = _PLANNER_CACHE.get(key)
-    if cached is not None:
-        return cached
-    planner = OAIQueryPlanner(
+    return OAIQueryPlanner(
         fixture_studies(spark),
         source_defs=[
             {"url": "http://services.fsd.tuni.fi/v0/oai", "source": "FSD",
@@ -51,8 +44,6 @@ def _planner(spark: SparkSession, page_size: int = 5) -> OAIQueryPlanner:
         configurable_path=None,
         page_size=page_size,
     )
-    _PLANNER_CACHE[key] = planner
-    return planner
 
 
 def q_studies_list_page(spark: SparkSession, sf_dir: str) -> DataFrame:

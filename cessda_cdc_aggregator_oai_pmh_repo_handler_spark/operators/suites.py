@@ -35,7 +35,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, memoized, plan_memoized, snapshot_key
 from . import (ann, arrays, assembly, bpe, clustering, dedup, expectations,
                pii, relational, relational_ext, spatial, text_analysis)
 
@@ -99,23 +99,6 @@ def _oracle_long(sub: Sub) -> str:
     return "\nUNION ALL\n".join(selects)
 
 
-# Built per-sub long-format DataFrames memoized per (session, corpus
-# ident) — the _TABLE_CACHE precedent taken one level up: a DataFrame is
-# an immutable LOGICAL PLAN, so constructing each sub-query once per
-# (session, corpus) is safe. Measured r10: corpus_stats_suite spent
-# 28.7 s per call just BUILDING its 94 sub-plans (py4j expression
-# construction + Catalyst analysis). Deliberately NOT a memo of the
-# final union DataFrame: re-collecting one cached top-level Dataset
-# would let Spark SKIP completed shuffle map stages across bench runs
-# (shuffle-output reuse ≈ result caching — measured sql_surface_suite
-# 12 s → 3.7 s that way, and rejected); a FRESH union per call creates a
-# new query execution with no shared RDD lineage, so every timed run
-# recomputes from the parquet inputs. Cleared by clear_corpus_caches,
-# so cold mode still prices full construction, and entries die with the
-# sub-op memo checkpoints they reference.
-_SUITE_PLAN_CACHE: dict = {}
-
-
 def _union_tree(parts: list) -> DataFrame:
     """Balanced unionByName tree: Catalyst analysis of a left-leaning
     94-branch union chain is superlinear in depth; a balanced tree keeps
@@ -131,20 +114,23 @@ def _union_tree(parts: list) -> DataFrame:
 
 def _make_suite(name: str, subs: tuple[Sub, ...]):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..sources.tables import (TABLES, corpus_ident, memo_put,
-                                      session_key)
-
-        # r11 (advice + verdict #10): the key folds the idents of EVERY
-        # table (suites read lineitem/orders/customer/events/… , not
-        # only documents — a non-documents table regenerated in place
-        # must invalidate the cached sub-plans), and the suite NAME
-        # replaces the brittle id(subs).
-        ident = "||".join(corpus_ident(sf_dir, t) for t in TABLES)
-        key = (session_key(spark), ident, name)
-        parts = _SUITE_PLAN_CACHE.get(key)
-        if parts is None:
-            parts = [_spark_long(s.fn(spark, sf_dir), s) for s in subs]
-            memo_put(_SUITE_PLAN_CACHE, key, tuple(parts))
+        # Built per-sub long-format DataFrames memoized per (session,
+        # every table's ident): a DataFrame is an immutable LOGICAL PLAN,
+        # so constructing each sub-query once per snapshot is safe.
+        # Measured r10: corpus_stats_suite spent 28.7 s per call just
+        # BUILDING its 94 sub-plans (py4j expression construction +
+        # Catalyst analysis). Deliberately NOT a memo of the final union
+        # DataFrame: re-collecting one cached top-level Dataset would let
+        # Spark SKIP completed shuffle map stages across bench runs
+        # (shuffle-output reuse ≈ result caching — measured
+        # sql_surface_suite 12 s → 3.7 s that way, and rejected); a FRESH
+        # union per call creates a new query execution with no shared RDD
+        # lineage, so every timed run recomputes from the parquet inputs.
+        # No job-firing guard either: suites whose sub-ops checkpoint
+        # stay cached.
+        parts = memoized(
+            snapshot_key(spark, sf_dir, f"suite:{name}"),
+            lambda: tuple(_spark_long(s.fn(spark, sf_dir), s) for s in subs))
         return _union_tree(list(parts))
 
     sql = "\nUNION ALL\n".join(_oracle_long(s) for s in subs)
@@ -1060,10 +1046,8 @@ SUITE_SUBS = {
 # jobs are never cached (the wrapper's guard), every hit returns a fresh
 # Dataset that recomputes from parquet, and clear_corpus_caches clears
 # the memo — cold numbers still price full construction.
-from ..sources.tables import plan_memoized as _plan_memoized  # noqa: E402
-
 SUITE_SUBS = {
-    name: tuple(dataclasses.replace(s, fn=_plan_memoized(f"sub:{s.op}", s.fn))
+    name: tuple(dataclasses.replace(s, fn=plan_memoized(f"sub:{s.op}", s.fn))
                 for s in subs)
     for name, subs in SUITE_SUBS.items()
 }

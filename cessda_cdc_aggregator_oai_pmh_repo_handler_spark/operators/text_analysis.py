@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import corpus_key, load_table, local_rows, memo_put
+from ..sources.tables import corpus_memo, load_table, local_rows
 
 # tiny stopword/marker inventories; deliberately deterministic & portable
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -32,13 +32,12 @@ def _words(col="text"):
     return F.split(F.lower(col), " ")
 
 
-_TOKENIZED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # bump when _words() or the side-table projection changes — part of the
 # persistent cache tag so old side-tables are abandoned, not served
 _TOKENIZED_LOGIC_V = "tok-v1:doc_id,source,lang,n_chars,text,words=split(lower(text))"
 
 
+@corpus_memo(table="documents")
 def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized tokenized corpus — (doc_id, source, lang, n_chars,
     text, words) — computed ONCE per (session, sf_dir) and shared by every
@@ -53,10 +52,6 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    key = corpus_key(spark, sf_dir)
-    cached = _TOKENIZED_CACHE.get(key)
-    if cached is not None:
-        return cached
     # columnar cache, NOT localCheckpoint: checkpointed rows lose column
     # pruning and the vectorized reader, so every consumer would deserialize
     # text AND words whether it needs them or not (measured: suite 7.7 s →
@@ -97,7 +92,6 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # TMPDIR) — the staging copy is a complete valid table
                 path = staging
     docs = spark.read.parquet(path)
-    memo_put(_TOKENIZED_CACHE, key, docs)
     return docs
 
 
@@ -110,24 +104,16 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of it, heaps' (N, V) fold is one aggregate over it. Narrow (source,
 # term, c), vocabulary×sources-sized — orders of magnitude below the
 # token stream it summarizes. Memoized per (session, corpus) like the
-# tokenized corpus; registered in clear_corpus_caches so cold runs
-# price the build.
-_TERM_FREQ_CACHE: dict = {}
-
-
+# tokenized corpus.
+@corpus_memo(table="documents")
 def _term_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(source, w, c): exact token counts per source, empty tokens
     INCLUDED (tfidf counts them; zipf/heaps filter on length(w) > 0
     afterwards, which is exact on the aggregated rows)."""
-    key = corpus_key(spark, sf_dir)
-    hit = _TERM_FREQ_CACHE.get(key)
-    if hit is not None:
-        return hit
     d = _tokenized_docs(spark, sf_dir)
     tf = (d.select("source", F.explode("words").alias("w"))
           .groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
           .localCheckpoint())
-    memo_put(_TERM_FREQ_CACHE, key, tf)
     return tf
 
 
@@ -507,14 +493,8 @@ def winnow_pairs(docs: DataFrame, k: int = 3, w: int = 4,
 WINNOW_MIN_SHARED = 3  # candidate pairs need ≥3 shared fingerprints
 WINNOW_MAX_DF = 20     # stop-fingerprint document-frequency cap
 
-# memoized materializations per (session, sf_dir) — same catalog-style
-# reuse as dedup._SHINGLE_CACHE: repeated gate/bench runs re-probe a
-# built relation instead of re-fingerprinting the corpus
-_WINNOW_FP_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LEAK_GRAM_CACHE: dict[tuple[str, str], DataFrame] = {}
-_BIGRAM_EX_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@corpus_memo(table="documents")
 def _bigram_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exploded bigram relation (doc_id, source, lang, ph, bh) shared
     by the corpus-LM scorer and the DSIR weigher — each consumes it three
@@ -523,30 +503,23 @@ def _bigram_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 digests + keys), so the checkpoint's loss of column pruning is
     immaterial; at 100 TB this is the persisted bigram side-table the
     first scoring job writes."""
-    key = corpus_key(spark, sf_dir)
-    ex = _BIGRAM_EX_CACHE.get(key)
-    if ex is None:
-        d = _tokenized_docs(spark, sf_dir)
-        ex = (
-            d.select("doc_id", "source", "lang",
-                     F.explode(_ngrams(F.col("words"), 2)).alias("g"))
-            .select("doc_id", "source", "lang",
-                    F.md5(F.col("g")["0"]).alias("ph"),
-                    F.md5(F.concat_ws(" ", F.col("g")["0"], F.col("g")["1"]))
-                    .alias("bh"))
-            .localCheckpoint()
-        )
-        memo_put(_BIGRAM_EX_CACHE, key, ex)
-    return ex
+    d = _tokenized_docs(spark, sf_dir)
+    return (
+        d.select("doc_id", "source", "lang",
+                 F.explode(_ngrams(F.col("words"), 2)).alias("g"))
+        .select("doc_id", "source", "lang",
+                F.md5(F.col("g")["0"]).alias("ph"),
+                F.md5(F.concat_ws(" ", F.col("g")["0"], F.col("g")["1"]))
+                .alias("bh"))
+        .localCheckpoint()
+    )
 
 
+# memoized per (session, sf_dir): repeated gate/bench runs re-probe a
+# built relation instead of re-fingerprinting the corpus
+@corpus_memo(table="documents")
 def _winnow_fp_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = corpus_key(spark, sf_dir)
-    fp = _WINNOW_FP_CACHE.get(key)
-    if fp is None:
-        fp = winnow_exploded(load_table(spark, "documents", sf_dir))
-        memo_put(_WINNOW_FP_CACHE, key, fp)
-    return fp
+    return winnow_exploded(load_table(spark, "documents", sf_dir))
 
 
 def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1585,6 +1558,22 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 LEAK_K = 8  # 8-gram overlap = verbatim leakage, not shared vocabulary
 
 
+@corpus_memo(table="documents")
+def _leak_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(split, doc_id, gram): each document's distinct word LEAK_K-gram
+    digests, staged through one checkpoint."""
+    d = _tokenized_docs(spark, sf_dir)
+    split = split_col(F.col("doc_id"))
+    w = F.col("words")
+    grams = F.array_distinct(F.transform(
+        _ngrams(w, LEAK_K),
+        lambda g: F.md5(F.concat_ws(" ", *[g[str(j)] for j in range(LEAK_K)])),
+    ))
+    staged = d.select("doc_id", split.alias("split"), grams.alias("grams")) \
+        .localCheckpoint()
+    return staged.select("split", "doc_id", F.explode("grams").alias("gram"))
+
+
 def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-split decontamination check: documents in val/test sharing a
     verbatim word 8-gram with any TRAIN document — the leakage a
@@ -1598,20 +1587,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-to-doc. At 100 TB add the stop-gram df cap used by winnow_pairs;
     8-grams make collision buckets rare enough here that the join stays
     bounded without it."""
-    key = corpus_key(spark, sf_dir)
-    ex = _LEAK_GRAM_CACHE.get(key)
-    if ex is None:
-        d = _tokenized_docs(spark, sf_dir)
-        split = split_col(F.col("doc_id"))
-        w = F.col("words")
-        grams = F.array_distinct(F.transform(
-            _ngrams(w, LEAK_K),
-            lambda g: F.md5(F.concat_ws(" ", *[g[str(j)] for j in range(LEAK_K)])),
-        ))
-        staged = d.select("doc_id", split.alias("split"), grams.alias("grams")) \
-            .localCheckpoint()
-        ex = staged.select("split", "doc_id", F.explode("grams").alias("gram"))
-        memo_put(_LEAK_GRAM_CACHE, key, ex)
+    ex = _leak_grams(spark, sf_dir)
     train = ex.filter(F.col("split") == "train").select(
         "gram", F.col("doc_id").alias("train_doc"))
     other = ex.filter(F.col("split") != "train")
@@ -1686,16 +1662,10 @@ TR_ITERS = 4         # fixed power iterations (TextRank converges fast)
 TR_ONE = 10 ** 12    # fixed-point unit: ranks are BIGINT micro-ranks
 
 
-_TEXTRANK_SYM_CACHE: dict = {}
-
-
+@corpus_memo(table="documents")
 def _textrank_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized, weight-filtered co-occurrence edge checkpoint for
     textrank — memoized per (session, corpus)."""
-    key = corpus_key(spark, sf_dir)
-    hit = _TEXTRANK_SYM_CACHE.get(key)
-    if hit is not None:
-        return hit
     d = load_table(spark, "documents", sf_dir)
     toks = d.select(F.slice(
         F.filter(_words(), lambda x: F.length(x) >= TR_MIN_LEN),
@@ -1719,7 +1689,6 @@ def _textrank_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(edges.select(F.col("b").alias("src"),
                                   F.col("a").alias("dst"), "w")) \
         .localCheckpoint()
-    memo_put(_TEXTRANK_SYM_CACHE, key, sym)
     return sym
 
 
@@ -1923,20 +1892,12 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg + bucket counts + offset window + in-bucket windows) executed 4×
 # across the pair per bench pass (13 single-task jobs each, ~0.85 s of
 # pure stage launch). Checkpointed + memoized per (session, corpus) like
-# the order baskets (guide §3.3); registered in clear_corpus_caches so
-# the bench's cold mode still prices the build.
-_BOOT_RANKED_CACHE: dict = {}
-
-
+# the order baskets (guide §3.3).
+@corpus_memo(table="documents")
 def _boot_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = corpus_key(spark, sf_dir)
-    hit = _BOOT_RANKED_CACHE.get(key)
-    if hit is not None:
-        return hit
     d = load_table(spark, "documents", sf_dir).select("doc_id", "n_chars")
     ranked = bucketed_global_rank(d, "doc_id", (), "_pos").select(
         (F.col("_pos") - 1).alias("rn"), "n_chars").localCheckpoint()
-    memo_put(_BOOT_RANKED_CACHE, key, ranked)
     return ranked
 
 
@@ -2525,7 +2486,7 @@ def q_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     class totals, priors, and V are 5-row/scalar broadcasts.
 
     The K²-row confusion relation is memoized+checkpointed per (session,
-    corpus) since r10 (the _COMPONENTS_CACHE shared-relation pattern):
+    corpus) since r10 (the neardup_components shared-relation pattern):
     cohens_kappa references it FOUR times (rows/cols/diag/total
     marginals) and Spark does not dedupe common subtrees, so the
     un-memoized form re-ran the whole train+score pipeline four times
@@ -2533,16 +2494,9 @@ def q_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _nb_confusion(spark, sf_dir)
 
 
-_NB_CONF_CACHE: dict = {}
-
-
+@corpus_memo(table="documents")
 def _nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    key = corpus_key(spark, sf_dir)
-    hit = _NB_CONF_CACHE.get(key)
-    if hit is not None:
-        return hit
 
     d = load_table(spark, "documents", sf_dir)
     toks = d.select(
@@ -2589,7 +2543,6 @@ def _nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("docs"),
           F.round(F.sum("score").cast("double"), 4).alias("sum_score"))
     conf = conf.coalesce(1).localCheckpoint()
-    memo_put(_NB_CONF_CACHE, key, conf)
     return conf
 
 
@@ -2956,16 +2909,10 @@ SALSA_ITERS = 4
 SALSA_MIN_C = 2        # prune hapax bigram edges
 
 
-_SALSA_EDGES_CACHE: dict = {}
-
-
+@corpus_memo(table="documents")
 def _salsa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed bigram edge checkpoint for SALSA — memoized per
     (session, corpus)."""
-    key = corpus_key(spark, sf_dir)
-    hit = _SALSA_EDGES_CACHE.get(key)
-    if hit is not None:
-        return hit
     d = _tokenized_docs(spark, sf_dir)
     toks = d.select(F.filter("words", lambda x: F.length(x) > 0)
                     .alias("toks"))
@@ -2981,7 +2928,6 @@ def _salsa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (adj.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("c"))
              .filter(F.col("c") >= SALSA_MIN_C)
              .localCheckpoint())
-    memo_put(_SALSA_EDGES_CACHE, key, edges)
     return edges
 
 
@@ -5156,22 +5102,14 @@ QUERIES["yule_k"] = q_yule_k
 # Yule's K, lexical diversity and Burrows' Delta all fold the same
 # token-explode groupBy; memoize the vocabulary-sized count relation so
 # a suite run pays the corpus pass once. Distinct from _tokenized_docs,
-# which lowercases (different token identity). Registered in
-# sources.tables.clear_corpus_caches.
-_SW_COUNTS_CACHE: dict = {}
-
-
+# which lowercases (different token identity).
+@corpus_memo(table="documents")
 def _source_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = corpus_key(spark, sf_dir)
-    hit = _SW_COUNTS_CACHE.get(key)
-    if hit is not None:
-        return hit
     d = load_table(spark, "documents", sf_dir)
     tok = d.select("source", F.explode(
         F.filter(F.split("text", " "), lambda x: x != "")).alias("w"))
     sw = (tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
           .coalesce(8).localCheckpoint())
-    memo_put(_SW_COUNTS_CACHE, key, sw)
     return sw
 
 

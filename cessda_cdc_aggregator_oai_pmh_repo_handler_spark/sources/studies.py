@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .tables import session_key
+from .tables import corpus_memo
 
 _VL = "array<struct<value:string,language:string>>"
 
@@ -209,19 +209,14 @@ def fixture_records() -> list[dict]:
     ]
 
 
-_FIXTURE_CACHE: dict[str, DataFrame] = {}
-
-
+@corpus_memo(table=None)
 def fixture_studies(spark: SparkSession) -> DataFrame:
     """Deterministic 8-record corpus, built and cached once per session
     (several demo queries and the whole OAI test-surface share it)."""
-    key = session_key(spark)
-    if key not in _FIXTURE_CACHE:
-        df = spark.createDataFrame(fixture_records(), schema=studies_schema())
-        # r11: localCheckpoint, not cache() — the cached plan still sat
-        # on a pickled-row RDD, so every catalog clearCache() (the
-        # bench's cold isolation) put the Python-worker deserialization
-        # back on the first action of every query; checkpointed blocks
-        # are JVM-resident until _FIXTURE_CACHE itself is cleared
-        _FIXTURE_CACHE[key] = df.localCheckpoint()
-    return _FIXTURE_CACHE[key]
+    df = spark.createDataFrame(fixture_records(), schema=studies_schema())
+    # r11: localCheckpoint, not cache() — the cached plan still sat on a
+    # pickled-row RDD, so every catalog clearCache() (the bench's cold
+    # isolation) put the Python-worker deserialization back on the first
+    # action of every query; checkpointed blocks are JVM-resident until
+    # the memo entry itself is cleared
+    return df.localCheckpoint()

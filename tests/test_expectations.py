@@ -109,12 +109,15 @@ def test_fk_check_null_child_keys_are_vacuously_valid(spark):
     assert row["checked"] == 4
 
 
-def test_memo_put_evicts_stale_corpus_entries(spark):
+def test_memo_insert_evicts_stale_corpus_entries(spark):
     """Regenerating a corpus in place must evict (and unpersist) the memo
     entry cached under the previous size/mtime ident — otherwise
     localCheckpoint blocks for the dead snapshot pin executor storage for
     the process lifetime (round-3 advice)."""
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import memo_put
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import tables
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (
+        memo_insert,
+    )
 
     class FakeDF:
         def __init__(self):
@@ -123,28 +126,44 @@ def test_memo_put_evicts_stale_corpus_entries(spark):
         def unpersist(self):
             self.unpersisted = True
 
-    cache = {}
-    old = FakeDF()
-    memo_put(cache, ("sess", "/d|documents|100|1"), old)
-    other_table = FakeDF()
-    memo_put(cache, ("sess", "/d|embeddings|50|1"), other_table)
-    other_session = FakeDF()
-    memo_put(cache, ("sess2", "/d|documents|100|1"), other_session)
-    # same session + same corpus path, new size/mtime -> evicts `old` only
-    new = FakeDF()
-    memo_put(cache, ("sess", "/d|documents|200|2"), new)
-    assert old.unpersisted
-    assert not other_table.unpersisted and not other_session.unpersisted
-    assert ("sess", "/d|documents|100|1") not in cache
-    assert cache[("sess", "/d|documents|200|2")] is new
-    assert len(cache) == 3
-    # extra discriminators (the PQ cell_probe flag) partition the space:
-    # same corpus, different flag is NOT stale
-    a, b = FakeDF(), FakeDF()
-    memo_put(cache, ("sess", "/d|documents|200|2", True), a)
-    memo_put(cache, ("sess", "/d|documents|300|3", False), b)
-    assert not a.unpersisted  # different flag survived
-    assert cache[("sess", "/d|documents|200|2")] is new  # 2-tuple untouched
+    def ours():
+        return {k: v for k, v in tables._MEMO.items()
+                if k[0] in ("sess", "sess2")}
+
+    try:
+        old = FakeDF()
+        memo_insert(("sess", "/d|documents|100|1", "m"), old)
+        other_table = FakeDF()
+        memo_insert(("sess", "/d|embeddings|50|1", "m"), other_table)
+        other_session = FakeDF()
+        memo_insert(("sess2", "/d|documents|100|1", "m"), other_session)
+        other_memo = FakeDF()
+        memo_insert(("sess", "/d|documents|100|1", "m2"), other_memo)
+        # same session + corpus path + memo, new size/mtime -> evicts `old`
+        new = FakeDF()
+        memo_insert(("sess", "/d|documents|200|2", "m"), new)
+        assert old.unpersisted
+        assert not other_table.unpersisted and not other_session.unpersisted
+        assert not other_memo.unpersisted
+        assert ("sess", "/d|documents|100|1", "m") not in ours()
+        assert ours()[("sess", "/d|documents|200|2", "m")] is new
+        assert len(ours()) == 4
+        # extra discriminators (the PQ cell_probe flag) partition the
+        # space: same corpus, different flag is NOT stale
+        a, b = FakeDF(), FakeDF()
+        memo_insert(("sess", "/d|documents|200|2", "m", True), a)
+        memo_insert(("sess", "/d|documents|300|3", "m", False), b)
+        assert not a.unpersisted  # different flag survived
+        # the no-extras key is untouched
+        assert ours()[("sess", "/d|documents|200|2", "m")] is new
+        # session fixtures (ident None) never evict each other
+        f1, f2 = FakeDF(), FakeDF()
+        memo_insert(("sess", None, "fixture", 8), f1)
+        memo_insert(("sess", None, "fixture", 16), f2)
+        assert not f1.unpersisted and len(ours()) == 8
+    finally:
+        for k in ours():
+            tables._MEMO.pop(k)
 
 
 def test_clear_corpus_caches_drops_and_unpersists(spark):
@@ -161,10 +180,11 @@ def test_clear_corpus_caches_drops_and_unpersists(spark):
             self.unpersisted = True
 
     fake = FakeDF()
-    dedup._SHINGLE_CACHE[("s", "i")] = fake
-    tables._TABLE_CACHE[("s", "/p")] = FakeDF()
+    tables.memo_insert(("s", "i", dedup._shingled_docs.memo_name), fake)
+    tables.memo_insert(("s", "/p", "tables.load_table"), FakeDF())
+    tables.memo_insert(("s", "i", "plan:q", True), (FakeDF(), [1]))
     tables.clear_corpus_caches()
-    assert dedup._SHINGLE_CACHE == {} and tables._TABLE_CACHE == {}
+    assert tables._MEMO == {}
     assert fake.unpersisted
 
 

@@ -70,7 +70,7 @@ print("OK")
 
 
 def test_lazy_oracle_is_memoized_and_matches_gate_key():
-    multimodal._ORACLE_CACHE = None
+    multimodal.oracles.cache_clear()
     first = multimodal.oracles()
     assert set(first) == {"multimodal_features"}
     assert first is multimodal.oracles()  # memoized

@@ -3,12 +3,18 @@ AsyncHTTPTestCase layer, /root/reference/tests/test_serve.py)."""
 
 from __future__ import annotations
 
+import random
+import types
+import urllib.error
 import urllib.request
 import xml.etree.ElementTree as ET
 
 import pytest
 
-from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.facade import OAIFacade
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai import server as srv_mod
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.facade import (
+    OAIFacade, RequestMetrics,
+)
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.server import OAIHTTPServer
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import OAIQueryPlanner
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import yaml_sets
@@ -78,8 +84,50 @@ def test_metrics_endpoint(server):
 
 
 def test_unknown_path_404(server):
-    import urllib.error
-
     with pytest.raises(urllib.error.HTTPError) as exc:
         fetch(server, "/nope")
     assert exc.value.code == 404
+
+
+def test_failing_routes_answer_generic_500(monkeypatch):
+    """Both routes sit under the handler's one try: a raising facade call
+    or metrics rollup still answers with a status line, and the 500 body
+    never carries the exception text."""
+    def boom(*args, **kwargs):
+        raise RuntimeError("secret-detail")
+
+    monkeypatch.setattr(srv_mod, "compute_metrics", boom)
+    stub = types.SimpleNamespace(
+        planner=types.SimpleNamespace(studies=None),
+        request_metrics=RequestMetrics(), handle_request=boom)
+    srv = OAIHTTPServer(stub, port=0).start()
+    try:
+        for path in ("/v0/oai?verb=Identify", "/metrics"):
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                fetch(srv, path)
+            assert exc.value.code == 500
+            assert exc.value.read().decode() == "internal error"
+    finally:
+        srv.stop()
+
+
+def test_request_durations_stay_fixed_size():
+    """Durations keep a running (sum, count) per label, not a list per
+    request; the exposition equals the list-based sums."""
+    rm = RequestMetrics()
+    rng = random.Random(7)
+    durs: dict = {}
+    labels = [("ListRecords", "oai_dc"), ("GetRecord", "oai_ddi25"),
+              ("Identify", None)]
+    for i in range(10_000):
+        label = labels[i % 3]
+        d = rng.uniform(0.1, 900.0)
+        rm.record(label[0], label[1], "ua", d, is_error=(i % 11 == 0))
+        if i % 11:
+            durs.setdefault(label, []).append(d)
+    assert all(len(v) == 2 for v in rm.requests_duration.values())
+    lines = srv_mod._request_metric_lines(rm).splitlines()
+    for (verb, prefix), ds in durs.items():
+        tag = f'{{verb="{verb}",metadataPrefix="{prefix or ""}"}}'
+        assert f"requests_duration_ms_sum{tag} {round(sum(ds), 3)}" in lines
+        assert f"requests_duration_ms_count{tag} {float(len(ds))}" in lines

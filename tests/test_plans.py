@@ -724,13 +724,18 @@ def test_markov_spine_is_shared_and_memoized(spark):
     extraction is the cached spine), and all three ops resolve to the
     same single cache entry."""
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import arrays
+    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import tables
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (
         clear_corpus_caches,
     )
 
+    def spine_entries():
+        name = arrays._markov_pair_counts.memo_name
+        return [k for k in tables._MEMO if k[2] == name]
+
     clear_corpus_caches(spark)
     arrays.q_markov_stationary(spark, SF)  # first build pays the spine
-    assert len(arrays._MARKOV_SPINE_CACHE) == 1
+    assert len(spine_entries()) == 1
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     df1 = arrays.q_markov_stationary(spark, SF)
@@ -743,7 +748,7 @@ def test_markov_spine_is_shared_and_memoized(spark):
     _ = df1.columns, df2.columns, df3.columns  # force analysis
     after = set(tracker.getJobIdsForGroup(None))
     assert after == before, f"build fired jobs: {sorted(after - before)}"
-    assert len(arrays._MARKOV_SPINE_CACHE) == 1
+    assert len(spine_entries()) == 1
 
 
 def test_markov_spine_trunc_matches_two_window_formulation(spark):

@@ -20,7 +20,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import (
     arrays, dedup, relational_ext, text_analysis,
 )
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (
-    _PLAN_CACHE, clear_corpus_caches, load_table, local_rows, plan_memoized,
+    _MEMO, clear_corpus_caches, load_table, local_rows, plan_memoized,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -73,7 +73,7 @@ def test_plan_memo_never_caches_job_firing_builds(spark):
     q(spark, SF)
     q(spark, SF)
     assert calls["n"] == 2
-    assert not any(k[2] == "t_eager" for k in _PLAN_CACHE)
+    assert not any(k[2] == "plan:t_eager" for k in _MEMO)
 
 
 def test_local_rows_is_jvm_local_no_python_rdd(spark):

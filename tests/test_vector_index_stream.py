@@ -101,10 +101,10 @@ def test_bootstrap_subset_does_not_poison_model_cache(spark, sf_dir, tmp_path):
     # the full-corpus gate query still ranks with full-corpus codebooks:
     # its top-1 must agree with a model trained fresh on the full corpus
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (
-        corpus_key,
+        _MEMO, corpus_key,
     )
     ck = corpus_key(spark, sf_dir, table="embeddings")
-    cached = ann._PQ_MODEL_CACHE.get(ck)
+    cached = _MEMO.get((*ck, "ann._pq_model"))
     if cached is not None:
         # whatever is cached under the corpus key must carry the demo
         # query vector — i.e. it came from a full-corpus training run,

@@ -10,7 +10,10 @@ stdlib-only gate:
 2. AST sweep for module-private functions/classes (``_name``) that are
    never referenced anywhere in their own module — the exact shape of the
    dead ``_headers`` helper that hid the r4 crash,
-3. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
+3. AST sweep for module-level ``*_CACHE`` dicts in the package: every
+   corpus or session memo lives in the one registry
+   (``sources/tables.corpus_memo``), never in a hand-rolled cache dict,
+4. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
    contract (the driver's smoke surface).
 
 Exit code 0 = safe to commit. Run: ``python tools/commit_gate.py``.
@@ -100,6 +103,35 @@ def check_dead_private(paths) -> list[str]:
     return errs
 
 
+def memo_dict_problems(source: str, filename: str) -> list[str]:
+    """Module-level names ending in ``_CACHE`` bound to a dict."""
+    errs = []
+    for node in ast.parse(source, filename=filename).body:
+        if isinstance(node, ast.Assign):
+            targets, value = node.targets, node.value
+        elif isinstance(node, ast.AnnAssign) and node.value is not None:
+            targets, value = [node.target], node.value
+        else:
+            continue
+        is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
+            isinstance(value, ast.Call) and isinstance(value.func, ast.Name)
+            and value.func.id == "dict")
+        for t in targets:
+            if is_dict and isinstance(t, ast.Name) and t.id.endswith("_CACHE"):
+                errs.append(f"MEMO {filename}:{node.lineno}: module-level "
+                            f"cache dict '{t.id}' — use sources.tables."
+                            f"corpus_memo")
+    return errs
+
+
+def check_memo_dicts(paths) -> list[str]:
+    errs = []
+    for p in paths:
+        if PKG in p.parts:
+            errs += memo_dict_problems(p.read_text(), str(p))
+    return errs
+
+
 def check_entry_contract() -> list[str]:
     script = (
         "import sys; sys.path.insert(0, %r)\n"
@@ -121,6 +153,7 @@ def main() -> int:
     paths = [p for p in iter_sources() if p.exists()]
     errs = check_syntax(paths)
     errs += check_dead_private(paths)
+    errs += check_memo_dicts(paths)
     errs += check_entry_contract()
     for e in errs:
         print(e)

@@ -48,8 +48,15 @@ from pyspark.sql import SparkSession, functions as F
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.session import build_session
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import dedup
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (
-    clear_corpus_caches,
+    _MEMO, clear_corpus_caches,
 )
+
+def forget(builder) -> None:
+    """Drop a corpus_memo builder's registry entries so its next call
+    rebuilds (the other memos, e.g. the verified pairs, stay warm)."""
+    for k in [k for k in _MEMO if k[2] == builder.memo_name]:
+        del _MEMO[k]
+
 
 VOCAB = 5000          # distinct background words
 DOC_WORDS = 30        # words per document
@@ -221,7 +228,7 @@ def stress_once(spark: SparkSession, sf_dir: str, scale_tag: str) -> dict:
     # --- connected components: FORCE the distributed path ----------------
     saved_cap = dedup.LOCAL_CC_MAX_EDGES
     dedup.LOCAL_CC_MAX_EDGES = 0  # hybrid switch must pick propagation
-    dedup._COMPONENTS_CACHE.clear()
+    forget(dedup.q_neardup_components)
     try:
         secs, stats = timed(lambda: dedup.q_neardup_components(spark, sf_dir)
                             .agg(F.count("*").alias("n"),
@@ -233,7 +240,7 @@ def stress_once(spark: SparkSession, sf_dir: str, scale_tag: str) -> dict:
         }
     finally:
         dedup.LOCAL_CC_MAX_EDGES = saved_cap
-        dedup._COMPONENTS_CACHE.clear()
+        forget(dedup.q_neardup_components)
 
     # --- graph analytics over the verified pair relation ------------------
     # triangle counting on the capped viral cluster: the oriented wedge
@@ -246,7 +253,7 @@ def stress_once(spark: SparkSession, sf_dir: str, scale_tag: str) -> dict:
         "triangles": int((stats["t3"] or 0) // 3),
     }
     # BFS hop distance: sweep count == diameter (early exit), not MAX_HOPS
-    dedup._HOPS_CACHE.clear()
+    forget(dedup.q_neardup_hop_distance)
     secs, stats = timed(lambda: dedup.q_neardup_hop_distance(spark, sf_dir)
                         .agg(F.count("*").alias("reached"),
                              F.max("hops").alias("maxh")).first())
