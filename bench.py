@@ -30,9 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.session import build_session
-from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (
-    clear_corpus_caches,
-)
+from tools.oprun import cold_warm, op_builders
 
 
 # The round-5-final sub-operator roster (git d27b23d). The headline warm
@@ -89,7 +87,7 @@ token_stats topk_per_group train_val_split
 """.split())
 
 
-def _run_ab_interleave(spark, sf_dir, ab_repo, qs, suite_sub_lists):
+def _run_ab_interleave(spark, sf_dir, ab_repo, builders):
     """Time every op COMMON TO BOTH repos on THIS repo (A) and on the
     pinned repo at ``ab_repo`` (B, in a subprocess worker) back-to-back,
     alternating which side goes first per op to cancel order bias (r9
@@ -100,30 +98,14 @@ def _run_ab_interleave(spark, sf_dir, ab_repo, qs, suite_sub_lists):
     bench."""
     import subprocess
 
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import suites
-
     here = os.path.dirname(os.path.abspath(__file__))
-    suite_names = set(suite_sub_lists)
     # r10: time EVERY op common to both repos (the worker advertises its
     # full roster), not only the r5 frozen cohort — ops added after r5
     # are where optimization rounds move the most, and the frozen-only
     # record was blind to them. The frozen-cohort sums are still
     # reported (computed from the same measurements) for cross-round
     # continuity.
-    thunks = {}
-    frozen: set[str] = set()
-    for name, fn in qs.items():
-        if name not in suite_names:
-            thunks[name] = (lambda fn=fn: fn(spark, sf_dir).collect())
-            if name in FROZEN_SINGLETONS_R5:
-                frozen.add(name)
-    for subs in suite_sub_lists.values():
-        for s in subs:
-            thunks[s.op] = (lambda s=s:
-                            suites._spark_long(s.fn(spark, sf_dir), s)
-                            .collect())
-            if s.op in FROZEN_COHORT_R5:
-                frozen.add(s.op)
+    frozen = set(builders) & (FROZEN_SINGLETONS_R5 | FROZEN_COHORT_R5)
 
     # r10 post-mortem: the end-of-round interleave died with a
     # JSONDecodeError because the worker's stdout carried a non-protocol
@@ -159,7 +141,7 @@ def _run_ab_interleave(spark, sf_dir, ab_repo, qs, suite_sub_lists):
 
     try:
         ready = read_msg()
-        roster = sorted(set(thunks) & set(ready["ops"]))
+        roster = sorted(set(builders) & set(ready["ops"]))
         limit = os.environ.get("SPARK_GRAFT_AB_LIMIT")
         if limit:
             roster = roster[: int(limit)]
@@ -174,10 +156,10 @@ def _run_ab_interleave(spark, sf_dir, ab_repo, qs, suite_sub_lists):
             return float(msg["sec"])
 
         def time_a(op):
-            run = thunks[op]
-            run()  # warm (mirrors the worker's 1-warm-1-timed protocol)
+            build = builders[op]
+            build(spark, sf_dir).collect()  # warm, as the worker does
             t0 = time.perf_counter()
-            run()
+            build(spark, sf_dir).collect()
             return round(time.perf_counter() - t0, 4)
 
         ops: dict[str, list[float]] = {}
@@ -209,7 +191,7 @@ def _run_ab_interleave(spark, sf_dir, ab_repo, qs, suite_sub_lists):
             "cohort_b_sec": fb,
             "a_over_b": round(fa / fb, 4) if fb else None,
             "n_ops": len(ops),
-            "only_a": sorted(set(thunks) - set(ready["ops"])),
+            "only_a": sorted(set(builders) - set(ready["ops"])),
             "ops_ab_sec": ops,
         }
     except Exception as e:  # record, don't fail the round's bench
@@ -241,18 +223,9 @@ def main():
     total_cold = 0.0
     total_warm = 0.0
     for name, fn in qs.items():
-        clear_corpus_caches(spark)  # cold isolation: no inherited state
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        dt_cold = time.perf_counter() - t0
-        # warm = best of two steady-state runs: a single warm sample is
-        # vulnerable to one GC pause / box hiccup, which round-over-round
-        # comparisons then misread as a regression
-        dt_warm = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            dt_warm = min(dt_warm, time.perf_counter() - t0)
+        # cold isolation (memo registry cleared), then best of two warm
+        dt_cold, dt_warm, _ = cold_warm(
+            spark, lambda: fn(spark, sf_dir).collect())
         cold[name] = round(dt_cold, 4)
         warm[name] = round(dt_warm, 4)
         total_cold += dt_cold
@@ -262,6 +235,7 @@ def main():
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import suites
     suite_sub_lists = suites.SUITE_SUBS  # the canonical roster (r7)
     suite_subs = {name: len(subs) for name, subs in suite_sub_lists.items()}
+    builders = op_builders()
 
     # Per-sub-op attribution (the only bench lines that move round-over-
     # round are suite rows; a growth vs regression question must be
@@ -275,11 +249,11 @@ def main():
         # memo caches (shingles, verified pairs, codebooks) — attribution
         # must measure the op, not its neighbors' prerequisites.
         for s in subs:
-            suites._spark_long(s.fn(spark, sf_dir), s).collect()
+            builders[s.op](spark, sf_dir).collect()
         ops: dict[str, float] = {}
         for s in subs:
             t0 = time.perf_counter()
-            suites._spark_long(s.fn(spark, sf_dir), s).collect()
+            builders[s.op](spark, sf_dir).collect()
             ops[s.op] = round(time.perf_counter() - t0, 4)
         suite_op_sec[suite_name] = ops
     # --- Same-run A/B interleave (r8 verdict #7) ------------------------
@@ -296,7 +270,7 @@ def main():
     ab = None
     ab_repo = os.environ.get("SPARK_GRAFT_AB_REPO")
     if ab_repo:
-        ab = _run_ab_interleave(spark, sf_dir, ab_repo, qs, suite_sub_lists)
+        ab = _run_ab_interleave(spark, sf_dir, ab_repo, builders)
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     # Detail first (big maps on their own line / sidecar), compact
@@ -318,25 +292,6 @@ def main():
     detail = {
         "detail": "per_query_and_per_subop_seconds",
         "frozen_cohort_sec": frozen_cohort_sec,
-        # r7 verdict #6: cohort measured in isolation at the START of
-        # round 8 (HEAD 11015db, before any new operators landed):
-        # 93.7546s vs r7-end 89.9906s. Per-sub-op diff vs r7's
-        # BENCH_DETAIL showed no systemic creep — 108/196 common sub-ops
-        # within ±0.05s, the rest split both directions (max single
-        # regression outside changed ops: ewma_smooth +0.48s; largest
-        # improvements cohens_kappa −0.59s, salsa_scores −0.57s) — so
-        # the +4.2% is box noise, not an r7 code regression; no
-        # bisection warranted. Compare this round's end-of-round
-        # frozen_cohort_sec above against BOTH numbers.
-        "frozen_cohort_start_of_round_r8": 93.7546,
-        # CONTROL experiment closing the question: bench re-run at r7
-        # HEAD (0068df1, git worktree) at 11:15 the same day read
-        # 106.95s — WORSE than the r8-HEAD end-of-round 98.25s measured
-        # 20 minutes earlier. The identical r7 code that read 89.99s at
-        # round-7 time reads ~107s now: the drift is box state, not
-        # code, and like-for-like r8 is faster than r7 under the same
-        # conditions. Readings are only comparable within one run.
-        "frozen_cohort_r7head_control": 106.9516,
         "frozen_cohort_missing": cohort_missing,
         "frozen_cohort": ("r5 roster (134 suite sub-ops + the pinned "
                           "FROZEN_SINGLETONS_R5 singleton slots); "

@@ -25,6 +25,15 @@ from . import formats as FMT
 from . import render as R
 
 
+class _OAIError(Exception):
+    """An OAI-PMH protocol error; ``handle_request`` renders it as an
+    ``<error>`` element and counts the request as failed."""
+
+    def __init__(self, code: str, message: str, args: dict | None = None):
+        super().__init__(code, message)
+        self.code, self.message, self.request_args = code, message, args
+
+
 class RequestMetrics:
     """Request-level counters/durations, mirroring the reference's
     log_request hook (/root/reference/cdcagg_oai/metrics.py:224-246):
@@ -120,11 +129,6 @@ class OAIFacade:
             return set()
         return {k for k in args if k not in allowed}
 
-    def _error(self, verb, request_ts, code, message, args=None) -> str:
-        self._last_was_error = True
-        root, _ = R.envelope(verb, self.base_url, request_ts, args, error=(code, message))
-        return R.to_string(root, self.stylesheet_url)
-
     # --- entry point ---------------------------------------------------------
 
     def handle_request(self, verb: str | None = None, request_ts: str | None = None,
@@ -133,14 +137,14 @@ class OAIFacade:
 
         request_ts = request_ts or self._now()
         t0 = time.perf_counter()
-        self._last_was_error = False
+        err = None
         try:
             unknown = self._unknown_args(verb, args)
             if unknown:
                 # OAI 2.0 §3.6: any unrecognized argument is badArgument —
                 # it must never crash the handler thread responseless.
-                out = self._error(verb, request_ts, "badArgument",
-                                  f"Illegal argument(s): {', '.join(sorted(unknown))}")
+                raise _OAIError("badArgument",
+                                f"Illegal argument(s): {', '.join(sorted(unknown))}")
             elif verb == "Identify":
                 out = self._identify(request_ts)
             elif verb == "ListMetadataFormats":
@@ -149,8 +153,8 @@ class OAIFacade:
             elif verb == "ListSets":
                 if args.get("resumptionToken") is not None:
                     # the set hierarchy always fits one response; any token is stale
-                    out = self._error(verb, request_ts, "badResumptionToken",
-                                      "ListSets does not issue resumption tokens")
+                    raise _OAIError("badResumptionToken",
+                                    "ListSets does not issue resumption tokens")
                 else:
                     out = self._list_sets(request_ts)
             elif verb == "GetRecord":
@@ -158,17 +162,21 @@ class OAIFacade:
             elif verb in ("ListRecords", "ListIdentifiers"):
                 out = self._list(verb, request_ts, **args)
             else:
-                out = self._error(verb, request_ts, "badVerb",
-                                  f"Illegal OAI verb: {verb}")
+                raise _OAIError("badVerb", f"Illegal OAI verb: {verb}")
+        except _OAIError as exc:
+            err = exc
         except BadResumptionToken as exc:
-            out = self._error(verb, request_ts, "badResumptionToken", str(exc), args)
+            err = _OAIError("badResumptionToken", str(exc), args)
         except UnsupportedSetSpec as exc:
-            out = self._error(verb, request_ts, "badArgument",
-                              f"Unknown set spec: {exc}", args)
+            err = _OAIError("badArgument", f"Unknown set spec: {exc}", args)
+        if err is not None:
+            root, _ = R.envelope(verb, self.base_url, request_ts, err.request_args,
+                                 error=(err.code, err.message))
+            out = R.to_string(root, self.stylesheet_url)
         self.request_metrics.record(
             verb, args.get("metadataPrefix"), user_agent,
             1000.0 * (time.perf_counter() - t0),
-            is_error=self._last_was_error,
+            is_error=err is not None,
         )
         return out
 
@@ -208,10 +216,9 @@ class OAIFacade:
         if identifier is not None:
             exists = self.planner.get_record_exists(identifier)
             if not exists:
-                return self._error("ListMetadataFormats", request_ts,
-                                   "idDoesNotExist",
-                                   f"No record with identifier {identifier}",
-                                   {"identifier": identifier})
+                raise _OAIError("idDoesNotExist",
+                                f"No record with identifier {identifier}",
+                                {"identifier": identifier})
         root, body = R.envelope("ListMetadataFormats", self.base_url, request_ts,
                                 {"identifier": identifier})
         import xml.etree.ElementTree as ET
@@ -246,20 +253,20 @@ class OAIFacade:
         if missing:
             # OAI 2.0 §4.1: both arguments are REQUIRED; absence is
             # badArgument (cannotDisseminateFormat is for unsupported values)
-            return self._error("GetRecord", request_ts, "badArgument",
-                               f"Missing required argument(s): {', '.join(missing)}",
-                               args)
+            raise _OAIError("badArgument",
+                            f"Missing required argument(s): {', '.join(missing)}",
+                            args)
         if FMT.get(metadataPrefix) is None:
-            return self._error("GetRecord", request_ts, "cannotDisseminateFormat",
-                               f"Unknown metadataPrefix: {metadataPrefix}", args)
+            raise _OAIError("cannotDisseminateFormat",
+                            f"Unknown metadataPrefix: {metadataPrefix}", args)
         fmt = FMT.get(metadataPrefix)
         df = self.planner.get_record(identifier, metadataPrefix)
         if fmt.needs_derived:
             df = self._with_datacite_derived(df)
         rows = df.collect()
         if not rows:
-            return self._error("GetRecord", request_ts, "idDoesNotExist",
-                               f"No record with identifier {identifier}", args)
+            raise _OAIError("idDoesNotExist",
+                            f"No record with identifier {identifier}", args)
         row = rows[0]
         derived = None
         if fmt.needs_derived:
@@ -267,8 +274,8 @@ class OAIFacade:
             if not row["deleted"] and derived["preferred_identifier"] is None:
                 # F1: no OpenAIRE-type identifier ⇒ invalid for datacite
                 # (/root/reference/cdcagg_oai/metadataformats.py:775-788)
-                return self._error("GetRecord", request_ts, "idDoesNotExist",
-                                   f"No record with identifier {identifier}", args)
+                raise _OAIError("idDoesNotExist",
+                                f"No record with identifier {identifier}", args)
         root, body = R.envelope("GetRecord", self.base_url, request_ts, args)
         R.render_record(body, row, metadataPrefix, derived)
         return R.to_string(root, self.stylesheet_url)
@@ -302,34 +309,31 @@ class OAIFacade:
             # OAI 2.0 §4.3/4.5: metadataPrefix is REQUIRED unless resuming;
             # a missing required argument is badArgument, not
             # cannotDisseminateFormat (that code is for unsupported values)
-            return self._error(verb, request_ts, "badArgument",
-                               "metadataPrefix is required",
-                               {"set": set, "from": raw_from, "until": raw_until})
+            raise _OAIError("badArgument",
+                            "metadataPrefix is required",
+                            {"set": set, "from": raw_from, "until": raw_until})
         from_ts = self._parse_oai_date(raw_from)
         until_ts = self._parse_oai_date(raw_until, end=True)
         if (raw_from is not None and from_ts is None) or (
                 raw_until is not None and until_ts is None):
-            return self._error(
-                verb, request_ts, "badArgument",
-                "from/until must be YYYY-MM-DD or YYYY-MM-DDThh:mm:ssZ",
-                {"metadataPrefix": metadataPrefix, "set": set,
-                 "from": raw_from, "until": raw_until})
+            raise _OAIError("badArgument",
+                            "from/until must be YYYY-MM-DD or YYYY-MM-DDThh:mm:ssZ",
+                            {"metadataPrefix": metadataPrefix, "set": set,
+                             "from": raw_from, "until": raw_until})
         if (raw_from is not None and raw_until is not None
                 and len(raw_from) != len(raw_until)):
             # OAI 2.0 §3.3.1: from and until must share one granularity
-            return self._error(
-                verb, request_ts, "badArgument",
-                "from and until must use the same granularity",
-                {"metadataPrefix": metadataPrefix, "set": set,
-                 "from": raw_from, "until": raw_until})
+            raise _OAIError("badArgument",
+                            "from and until must use the same granularity",
+                            {"metadataPrefix": metadataPrefix, "set": set,
+                             "from": raw_from, "until": raw_until})
         if resumptionToken is not None:
             # resumptionToken is an EXCLUSIVE argument (OAI 2.0 §3.5); the
             # token itself carries prefix/set/from/until
             if any(v is not None for v in (metadataPrefix, set, raw_from, raw_until)):
-                return self._error(
-                    verb, request_ts, "badArgument",
-                    "resumptionToken is an exclusive argument",
-                    {"resumptionToken": resumptionToken})
+                raise _OAIError("badArgument",
+                                "resumptionToken is an exclusive argument",
+                                {"resumptionToken": resumptionToken})
             from ..plans.tokens import ResumptionToken as _RT
 
             metadataPrefix = _RT.decode(resumptionToken).metadata_prefix
@@ -337,8 +341,8 @@ class OAIFacade:
                 "from": raw_from, "until": raw_until,
                 "resumptionToken": resumptionToken}
         if resumptionToken is None and FMT.get(metadataPrefix) is None:
-            return self._error(verb, request_ts, "cannotDisseminateFormat",
-                               f"Unknown metadataPrefix: {metadataPrefix}", args)
+            raise _OAIError("cannotDisseminateFormat",
+                            f"Unknown metadataPrefix: {metadataPrefix}", args)
         header_only = verb == "ListIdentifiers"
         page = self.planner.list_page(
             metadataPrefix, set_spec=set, from_ts=from_ts, until_ts=until_ts,
@@ -350,8 +354,8 @@ class OAIFacade:
             df = self._with_datacite_derived(df)
         rows = df.collect()
         if not rows and resumptionToken is None:
-            return self._error(verb, request_ts, "noRecordsMatch",
-                               "No records match the given criteria", args)
+            raise _OAIError("noRecordsMatch",
+                            "No records match the given criteria", args)
         root, body = R.envelope(verb, self.base_url, request_ts, args)
         for row in rows:
             if header_only:

@@ -366,13 +366,6 @@ def render_provenance(parent, row) -> None:
         target = od
 
 
-METADATA_RENDERERS = {
-    "oai_dc": lambda parent, row, derived: render_oai_dc(parent, row),
-    "oai_datacite": render_oai_datacite,
-    "oai_ddi25": lambda parent, row, derived: render_oai_ddi25(parent, row),
-}
-
-
 def render_record(parent, row, metadata_prefix: str, derived: dict | None = None) -> None:
     """One <record>: header + (unless deleted) metadata + provenance about
     (deleted records are header-only, F9)."""
@@ -380,12 +373,9 @@ def render_record(parent, row, metadata_prefix: str, derived: dict | None = None
     render_header(rec, row)
     if not row["deleted"]:
         md = _sub(rec, f"{{{OAI_NS}}}metadata")
-        renderer = METADATA_RENDERERS.get(metadata_prefix)
-        if renderer is None:
-            from . import formats as FMT  # plugin formats (SURVEY §2.9)
+        from . import formats as FMT  # lazy: formats registers render's functions
 
-            renderer = FMT.get(metadata_prefix).renderer
-        renderer(md, row, derived or {})
+        FMT.get(metadata_prefix).renderer(md, row, derived or {})
         about = _sub(rec, f"{{{OAI_NS}}}about")
         render_provenance(about, row)
 

@@ -61,14 +61,10 @@ FORMAT_FIELDS: dict[str, list[str]] = {
     ],
 }
 
-METADATA_PREFIXES = tuple(FORMAT_FIELDS)
-
 
 def fields_for(metadata_prefix: str) -> list[str]:
-    """Projection for a prefix: built-ins, then the plugin registry
+    """Projection for a prefix, from the format registry
     (SURVEY §2.9; /root/reference/setup.py:41-45)."""
-    if metadata_prefix in FORMAT_FIELDS:
-        return FORMAT_FIELDS[metadata_prefix]
     from ..oai import formats  # lazy: formats registers built-ins from here
 
     fmt = formats.get(metadata_prefix)
@@ -187,13 +183,10 @@ class OAIQueryPlanner:
     def validity_filter(self, metadata_prefix: str) -> Column:
         """Format validity: datacite lists only records with an OpenAIRE-type
         identifier (P4, /root/reference/cdcagg_oai/metadataformats.py:775-788)."""
-        name = "openaire" if metadata_prefix == "oai_datacite" else None
-        if name is None:
-            from ..oai import formats  # lazy; see fields_for
+        from ..oai import formats  # lazy; see fields_for
 
-            fmt = formats.get(metadata_prefix)
-            name = fmt.validity_filter_name if fmt is not None else None
-        if name == "openaire":
+        fmt = formats.get(metadata_prefix)
+        if fmt is not None and fmt.validity_filter_name == "openaire":
             return P.elem_match("identifiers",
                                 lambda i: i["agency"].isin(*OPENAIRE_ID_TYPES))
         return F.lit(True)

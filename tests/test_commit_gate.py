@@ -1,10 +1,13 @@
-"""The commit gate's stray-memo check: every corpus or session memo lives
-in the one registry (sources/tables.corpus_memo), never in a module-level
-``*_CACHE`` dict."""
+"""The commit gate's AST checks: every corpus or session memo lives in the
+one registry (sources/tables.corpus_memo), never in a module-level
+``*_CACHE`` dict; and no tool puts a literal absolute path on sys.path."""
 
 from __future__ import annotations
 
-from tools.commit_gate import check_memo_dicts, iter_sources, memo_dict_problems
+from tools.commit_gate import (
+    check_literal_sys_path, check_memo_dicts, iter_sources,
+    literal_sys_path_problems, memo_dict_problems,
+)
 
 
 def test_package_has_no_memo_dicts():
@@ -16,3 +19,15 @@ def test_stray_cache_dict_is_flagged():
     assert len(memo_dict_problems(src, "m.py")) == 1
     assert len(memo_dict_problems("_Z_CACHE = dict()\n", "m.py")) == 1
     assert memo_dict_problems("def f():\n    _Z_CACHE = {}\n", "m.py") == []
+
+
+def test_tools_have_no_literal_sys_path():
+    assert check_literal_sys_path(list(iter_sources())) == []
+
+
+def test_literal_sys_path_is_flagged():
+    src = ('import os, sys\n'
+           'sys.path.insert(0, "/srv/other-checkout")\n'
+           'sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))\n'
+           'sys.path.append("relative/dir")\n')
+    assert len(literal_sys_path_problems(src, "t.py")) == 1

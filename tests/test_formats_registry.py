@@ -4,6 +4,7 @@ entry-point discovery, /root/reference/setup.py:41-45)."""
 
 from __future__ import annotations
 
+import dataclasses
 import xml.etree.ElementTree as ET
 
 import pytest
@@ -58,6 +59,31 @@ def test_custom_format_in_list_metadata_formats(spark, custom_format):
     prefixes = [e.text for e in el.findall(
         "./oai:ListMetadataFormats/oai:metadataFormat/oai:metadataPrefix", NS)]
     assert "oai_minimal" in prefixes
+
+
+def test_plugin_replaces_builtin_prefix(spark):
+    """A format re-registered under a built-in prefix is served with its
+    own projection and renderer: dispatch reads only the registry."""
+    builtin = FMT.get("oai_dc")
+    seen_fields = []
+
+    def render(parent, row, derived):
+        seen_fields.append(set(row.asDict()))
+        _render_minimal(parent, row, derived)
+
+    FMT.register(dataclasses.replace(
+        builtin, fields=HEADER_FIELDS + ["study_number"], renderer=render))
+    try:
+        facade = OAIFacade(OAIQueryPlanner(fixture_studies(spark)))
+        xml = facade.handle_request(verb="GetRecord", request_ts=NOW,
+                                    identifier="agg_id_1", metadataPrefix="oai_dc")
+    finally:
+        FMT.register(builtin)
+    md = ET.fromstring(xml).find("./oai:GetRecord/oai:record/oai:metadata", NS)
+    assert [(el.tag, el.text) for el in md] == [("minimal", "study_agg_id_1")]
+    assert "study_number" in seen_fields[0]
+    assert "study_titles" not in seen_fields[0]
+    assert FMT.get("oai_dc") is builtin
 
 
 def test_unknown_format_still_rejected(spark):

@@ -3,6 +3,7 @@ ElementTree-level assertions (/root/reference/tests/test_serve.py)."""
 
 from __future__ import annotations
 
+import threading
 import xml.etree.ElementTree as ET
 
 import pytest
@@ -296,6 +297,37 @@ def test_request_metrics_recorded(facade):
     assert m.requests_per_user_agent.get("pytest-ua", 0) >= 1
     assert ("Identify", None) in m.requests_duration
     assert ("Nope", None) not in m.requests_duration
+
+
+def test_concurrent_error_counts_against_its_own_request(facade):
+    """Two threads share one facade. B's badVerb completes while A's valid
+    ListRecords waits inside the planner; each outcome is counted once,
+    against its own request."""
+    shared = OAIFacade(facade.planner)
+    real_list_page = facade.planner.list_page
+    entered, release = threading.Event(), threading.Event()
+
+    def gated_list_page(*args, **kwargs):
+        entered.set()
+        release.wait(60)
+        return real_list_page(*args, **kwargs)
+
+    out = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(facade.planner, "list_page", gated_list_page)
+        a = threading.Thread(target=lambda: out.setdefault(
+            "a", shared.handle_request(verb="ListRecords", request_ts=NOW,
+                                       metadataPrefix="oai_dc")))
+        a.start()
+        assert entered.wait(60)
+        out["b"] = shared.handle_request(verb="Nope", request_ts=NOW)
+        release.set()
+        a.join(120)
+    assert not a.is_alive()
+    assert parse(out["a"]).find("./oai:error", NS) is None
+    assert parse(out["b"]).find("./oai:error", NS).get("code") == "badVerb"
+    m = shared.request_metrics
+    assert (m.requests_failed, m.requests_succeeded) == (1, 1)
 
 
 def test_list_records_selective_set(facade):

@@ -17,9 +17,10 @@ state — the failure mode a single-process module-swap design would hit
 is cloudpickle serializing by reference and the workers silently running
 the OTHER side's code.
 
-The roster mirrors bench.py's frozen-cohort surface: singleton queries()
-entries (suites excluded) plus every suite sub-op, each timed through
-the same ``suites._spark_long`` wrapper the suite uses.
+The roster is ``oprun.op_builders()``, as in bench.py. ``oprun`` is loaded
+from this file's directory before the pinned repo goes on ``sys.path``
+(``tools.oprun`` would resolve inside the pinned repo); it imports the
+package lazily, so the builders are the pinned repo's.
 """
 
 from __future__ import annotations
@@ -41,30 +42,21 @@ def emit(obj) -> None:
 
 
 def main() -> None:
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    import oprun
+
     repo = os.path.abspath(sys.argv[1])
     sys.path.insert(0, repo)
     os.chdir(repo)
 
-    import __spark_entry__ as entrymod
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import suites
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = build_session("cdcagg-bench-ab")
     spark.sparkContext.setLogLevel("ERROR")
+    builders = oprun.op_builders()
 
-    suite_names = set(suites.SUITE_SUBS)
-    thunks = {}
-    for name, fn in entrymod.queries().items():
-        if name not in suite_names:
-            thunks[name] = (lambda fn=fn: fn(spark, sf_dir).collect())
-    for subs in suites.SUITE_SUBS.values():
-        for s in subs:
-            thunks[s.op] = (lambda s=s:
-                            suites._spark_long(s.fn(spark, sf_dir), s)
-                            .collect())
-
-    emit({"ready": True, "ops": sorted(thunks)})
+    emit({"ready": True, "ops": sorted(builders)})
     warmed: set[str] = set()
     for line in sys.stdin:
         line = line.strip()
@@ -74,13 +66,13 @@ def main() -> None:
         if req.get("exit"):
             break
         op = req["op"]
-        run = thunks[op]
+        build = builders[op]
         try:
             if op not in warmed:
-                run()
+                build(spark, sf_dir).collect()
                 warmed.add(op)
             t0 = time.perf_counter()
-            run()
+            build(spark, sf_dir).collect()
             emit({"op": op, "sec": round(time.perf_counter() - t0, 4)})
         except Exception as e:  # report per-op failure, keep serving
             emit({"op": op, "sec": None, "error": repr(e)})

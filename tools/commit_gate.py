@@ -13,7 +13,10 @@ stdlib-only gate:
 3. AST sweep for module-level ``*_CACHE`` dicts in the package: every
    corpus or session memo lives in the one registry
    (``sources/tables.corpus_memo``), never in a hand-rolled cache dict,
-4. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
+4. AST sweep of tools/ and bench.py for ``sys.path.insert``/``append`` of
+   an absolute string literal: a tool run from another checkout must
+   import the tree it sits in, so it resolves the root from ``__file__``,
+5. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
    contract (the driver's smoke surface).
 
 Exit code 0 = safe to commit. Run: ``python tools/commit_gate.py``.
@@ -132,6 +135,29 @@ def check_memo_dicts(paths) -> list[str]:
     return errs
 
 
+def literal_sys_path_problems(source: str, filename: str) -> list[str]:
+    """``sys.path.insert``/``append`` calls given an absolute str literal."""
+    errs = []
+    for node in ast.walk(ast.parse(source, filename=filename)):
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("insert", "append")
+                and ast.unparse(node.func.value) == "sys.path"
+                and any(isinstance(a, ast.Constant) and isinstance(a.value, str)
+                        and a.value.startswith("/") for a in node.args)):
+            errs.append(f"PATH {filename}:{node.lineno}: literal sys.path "
+                        f"entry — resolve the repo root from __file__")
+    return errs
+
+
+def check_literal_sys_path(paths) -> list[str]:
+    errs = []
+    for p in paths:
+        rel = p.relative_to(REPO).parts
+        if rel[0] == "tools" or rel == ("bench.py",):
+            errs += literal_sys_path_problems(p.read_text(), str(p))
+    return errs
+
+
 def check_entry_contract() -> list[str]:
     script = (
         "import sys; sys.path.insert(0, %r)\n"
@@ -154,6 +180,7 @@ def main() -> int:
     errs = check_syntax(paths)
     errs += check_dead_private(paths)
     errs += check_memo_dicts(paths)
+    errs += check_literal_sys_path(paths)
     errs += check_entry_contract()
     for e in errs:
         print(e)

@@ -32,11 +32,12 @@ Usage: python tools/oracle_lint.py          # lint the live corpus
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from dataclasses import dataclass
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Money-provenance columns: DECIMAL-born values whose double arithmetic
 # lands on .xx5 rounding boundaries systematically (TPC-H money columns

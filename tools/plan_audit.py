@@ -5,11 +5,14 @@ tests/test_plans.py). Run: python tools/plan_audit.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.session import build_session
+from tools.oprun import explain_text
 
 HEADLINERS = {
     "point_lookup": "P2 GetRecord shape: EqualTo pushed into the parquet scan; no shuffle.",
@@ -163,9 +166,6 @@ HEADLINERS = {
 
 
 def main() -> None:
-    import contextlib
-    import io
-
     import __spark_entry__ as entry
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import (
         ann, arrays, assembly, bpe, dedup, expectations, pii, relational,
@@ -190,11 +190,8 @@ def main() -> None:
            ""]
     for name, note in HEADLINERS.items():
         df = qs[name](spark, "/root/testdata/sf0.01")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out += [f"## {name}", "", note, "", "```", buf.getvalue().rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+        out += [f"## {name}", "", note, "", "```", explain_text(df).rstrip(), "```", ""]
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
     spark.stop()

@@ -35,7 +35,7 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 5
 SF_DIR = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
