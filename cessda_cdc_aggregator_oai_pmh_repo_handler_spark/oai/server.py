@@ -21,7 +21,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from ..operators.metrics import compute_metrics, render_prometheus
+from ..operators.metrics import compute_metrics, escape_label, render_prometheus
 from .facade import OAIFacade
 
 OAI_PATH = "/v0/oai"
@@ -38,8 +38,8 @@ def _request_metric_lines(rm) -> str:
         f"requests_failed {float(rm.requests_failed)}",
     ]
     for ua, n in sorted(rm.requests_per_user_agent.items()):
-        ua_esc = ua.replace('"', '\\"')
-        lines.append(f'requests_per_user_agent{{harvester="{ua_esc}"}} {float(n)}')
+        lines.append(f'requests_per_user_agent{{harvester="{escape_label(ua)}"}} '
+                     f"{float(n)}")
     for (verb, prefix), (total_ms, count) in sorted(
             rm.requests_duration.items(),
             key=lambda kv: (str(kv[0][0]), str(kv[0][1]))):

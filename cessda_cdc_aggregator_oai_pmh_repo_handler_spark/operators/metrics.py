@@ -66,7 +66,7 @@ _GAUGE_HELP = {
 }
 
 
-def _escape_label(value: str) -> str:
+def escape_label(value: str) -> str:
     return value.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
 
 
@@ -87,7 +87,7 @@ def render_prometheus(metrics: dict) -> str:
         lines.append(f"# TYPE {name} gauge")
         for publisher, count in sorted(metrics[name].items()):
             lines.append(
-                f'{name}{{publisher="{_escape_label(publisher)}"}} {float(count)}'
+                f'{name}{{publisher="{escape_label(publisher)}"}} {float(count)}'
             )
     return "\n".join(lines) + "\n"
 

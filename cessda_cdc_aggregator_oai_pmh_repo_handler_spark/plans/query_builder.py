@@ -157,16 +157,7 @@ class OAIQueryPlanner:
             url = self._url_by_source.get(value)
             if url is None:
                 return F.lit(False)
-            cond = P.direct_hop_from(url)
-            if "publisher_bucket" in self.studies.columns:
-                # corpus stored in the publisher-bucketed layout
-                # (sources/corpus_layout.py): route the harvest through the
-                # partition key so the scan prunes to 1/N of the files
-                from ..sources.corpus_layout import N_BUCKETS
-
-                bucket = F.pmod(F.xxhash64(F.lit(url)), F.lit(N_BUCKETS)).cast("int")
-                cond = (F.col("publisher_bucket") == bucket) & cond
-            return cond
+            return P.direct_hop_from(url)
         if key == "language":
             if value is None:
                 return F.size("study_titles") > 0

@@ -8,9 +8,15 @@ Run:
         --oai-set-configurable-path thematic.yaml \
         --port 6003
 
-The corpus is any parquet directory with the studies schema (the plain or
-bucketed layout from streaming.ingest / sources.corpus_layout). Flags mirror
-the reference's names where they exist (--oai-set-sources-path,
+The corpus is a versioned table (sources.versioned_table), the store
+streaming.ingest's ``merge_batch_versioned`` writes. The server serves the
+table's current version at startup and keeps serving that version; a
+directory without a ``_VERSION`` pointer is refused at startup. A plain
+parquet corpus with the studies schema is imported once with
+
+    VT.create(spark.read.parquet(src), dst)
+
+Flags mirror the reference's names where they exist (--oai-set-sources-path,
 --oai-set-configurable-path, per-format list sizes, port 6003 default,
 /root/reference/cdcagg_oai/serve.py:56-117, metadataformats.py:162-167,
 328-332)."""
@@ -23,13 +29,14 @@ from .oai.facade import OAIFacade
 from .oai.server import OAIHTTPServer
 from .plans.query_builder import OAIQueryPlanner
 from .session import build_session
+from .sources import versioned_table as VT
 from .sources.yaml_sets import load_source_defs, validate_configurable
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description="CDC Aggregator OAI-PMH server (Spark)")
     p.add_argument("--corpus", required=True,
-                   help="parquet directory holding the studies corpus")
+                   help="versioned-table directory holding the studies corpus")
     p.add_argument("--port", type=int, default=6003)
     p.add_argument("--base-url", default="http://localhost:6003/v0/oai")
     p.add_argument("--oai-set-sources-path", default=None)
@@ -48,9 +55,15 @@ def build_app(args: argparse.Namespace, spark=None) -> OAIHTTPServer:
     """Wire settings → session → planner → facade → HTTP server (not yet
     started). Configure-time contracts mirror the reference: sources load
     once here; the configurable-set file is validated now and re-read per
-    request."""
+    request. The corpus must be a versioned table; the planner serves the
+    version that is current now."""
     from .oai import formats
 
+    if not VT.is_table(args.corpus):
+        raise ValueError(
+            f"--corpus {args.corpus} is not a versioned table (no _VERSION); "
+            "import a parquet corpus once with "
+            "VT.create(spark.read.parquet(src), dst)")
     # plugin formats load at SERVER startup, never at library import
     # (/root/reference/cdcagg_oai/serve.py:98)
     formats.discover_entry_points()
@@ -65,12 +78,15 @@ def build_app(args: argparse.Namespace, spark=None) -> OAIHTTPServer:
                          ("oai_datacite", args.oai_pmh_list_size_oai_datacite)):
         if flag is not None:
             page_sizes[prefix] = flag
+    version = VT.current_version(args.corpus)
     planner = OAIQueryPlanner(
-        spark.read.parquet(args.corpus),
+        VT.read(spark, args.corpus, version=version),
         source_defs=source_defs,
         configurable_path=args.oai_set_configurable_path,
         page_size=args.oai_pmh_list_size,
         page_sizes=page_sizes,
+        vt_path=args.corpus,
+        vt_version=version,
     )
     facade = OAIFacade(planner, base_url=args.base_url,
                        deleted_records=args.oai_pmh_deleted_records,

@@ -50,6 +50,11 @@ def _manifest_path(path: str, version: int) -> str:
     return os.path.join(path, "_manifests", f"v{version}.json")
 
 
+def is_table(path: str) -> bool:
+    """True iff ``path`` holds a published table (its ``_VERSION`` pointer)."""
+    return os.path.exists(_pointer_path(path))
+
+
 def current_version(path: str) -> int:
     with open(_pointer_path(path)) as f:
         return int(f.read().strip())

@@ -15,8 +15,7 @@ Scale design:
 
 - Appends write ONLY the batch's own epoch directory (overwrite of that
   directory, not of the index), so a replayed/restarted batch is
-  idempotent — the exactly-once story ``ingest.merge_batch`` implements
-  with epoch markers, realized here as epoch-partitioned layout.
+  idempotent — exactly-once realized as an epoch-partitioned layout.
 - A query broadcasts its terms and LEFT SEMI-probes postings: work
   scales with the query terms' posting lists (at 100 TB the postings
   table is bucketed by term, making the probe a pruned co-located scan),

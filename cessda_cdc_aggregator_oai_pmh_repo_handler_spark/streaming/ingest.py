@@ -17,18 +17,14 @@ the serve-side semantics (P3 null-keeping ``$ne``, F9 deleted datestamp):
   aggregator's own hop and refreshes the denormalized ``direct_base_url``
   (/root/reference/CHANGELOG.md:117-120).
 
-Scale note: ``foreachBatch`` + Delta ``MERGE INTO`` partitioned by
-``direct_base_url`` is the production path (partition-pruned merge, no full
-rewrite). Delta isn't available in this container, so ``merge_batch``
-realizes identical semantics with an anti-join + union + atomic directory
-swap — correct at any scale but paying a full rewrite per batch; the merge
-logic itself is target-format agnostic.
+The corpus store is the versioned table (``sources/versioned_table.py``):
+``merge_batch_versioned`` is the one ``foreachBatch`` sink and commits each
+microbatch as one snapshot version.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -104,140 +100,17 @@ def split_quarantine(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
     return batch.filter(~bad_cond), batch.filter(bad_cond)
 
 
-def _epoch_marker(target_path: str) -> str:
-    return f"{target_path}._last_epoch"
-
-
-def _read_epoch(target_path: str) -> int:
-    try:
-        with open(_epoch_marker(target_path)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
-        return -1
-
-
-def _write_epoch(target_path: str, epoch_id: int) -> None:
-    with open(_epoch_marker(target_path), "w") as f:
-        f.write(str(epoch_id))
-
-
-def merge_batch(batch: DataFrame, target_path: str,
-                quarantine_path: str | None = None,
-                epoch_id: int | None = None) -> None:
-    """Upsert/delete merge of one microbatch into the corpus at
-    ``target_path`` (the foreachBatch body). Equivalent Delta form:
-    ``MERGE INTO studies USING batch ON key WHEN MATCHED ... WHEN NOT
-    MATCHED INSERT``. Malformed events are appended to ``quarantine_path``
-    when given, silently dropped otherwise.
-
-    ``epoch_id`` makes the sink exactly-once under foreachBatch retries: a
-    marker records the last applied epoch and replays of an already-applied
-    microbatch become no-ops (the standard idempotent-sink pattern; Delta
-    tracks txn versions for the same purpose)."""
-    if epoch_id is not None and epoch_id <= _read_epoch(target_path):
-        return
-    spark = batch.sparkSession
-    batch, bad = split_quarantine(batch)
-    if quarantine_path is not None and bad.limit(1).count() > 0:
-        bad.write.mode("append").parquet(quarantine_path)
-    latest = _latest_event_per_key(batch)
-    # the swap decision keys on directory EXISTENCE, not on read success —
-    # an empty/partially-written target (stopped query) must still be
-    # replaced via rename-swap, never rename-onto
-    have_target = os.path.exists(target_path)
-    if have_target:
-        existing = spark.read.schema(studies_schema()).parquet(target_path)
-    else:
-        existing = spark.createDataFrame([], studies_schema())
-
-    incoming = _as_study_row(latest, existing).cache()
-    keys = incoming.select("aggregator_identifier")
-    kept = existing.join(keys, "aggregator_identifier", "left_anti")
-    merged = kept.unionByName(incoming)
-
-    staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(staging)
-    incoming.unpersist()
-    if have_target:
-        old = f"{target_path}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(target_path, old)
-        os.rename(staging, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(staging, target_path)
-    if epoch_id is not None:
-        _write_epoch(target_path, epoch_id)
-
-
-ID_BUCKETS = 16
-ID_BUCKET_COL = "id_bucket"
-
-
-def _id_bucket(col: str = "aggregator_identifier") -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(ID_BUCKETS)).cast("int")
-
-
-def merge_batch_bucketed(batch: DataFrame, target_path: str,
-                         quarantine_path: str | None = None,
-                         epoch_id: int | None = None) -> None:
-    """Partition-pruned merge: the corpus is partitioned by a hash bucket of
-    the PRIMARY KEY (immutable per record, unlike the publisher), so a
-    microbatch only ever touches the buckets its keys hash to. The merge
-    reads just those partitions (pruned scan) and dynamic partition
-    overwrite rewrites just those directories — batch-sized I/O against a
-    corpus-sized table, the no-Delta equivalent of MERGE + pruning. This is
-    the ``start_ingest`` default; ``merge_batch`` (full rewrite + atomic
-    swap) remains as the layout-free fallback.
-
-    ``epoch_id`` gives the same exactly-once replay protection as
-    ``merge_batch``; malformed events divert to ``quarantine_path``."""
-    if epoch_id is not None and epoch_id <= _read_epoch(target_path):
-        return
-    spark = batch.sparkSession
-    batch, bad = split_quarantine(batch)
-    if quarantine_path is not None and bad.limit(1).count() > 0:
-        bad.write.mode("append").parquet(quarantine_path)
-    latest = _latest_event_per_key(batch)
-    affected = [r[0] for r in
-                latest.select(_id_bucket().alias("b")).distinct().collect()]
-
-    have_target = os.path.exists(target_path)
-    if have_target:
-        existing = (
-            spark.read.schema(
-                studies_schema().add(ID_BUCKET_COL, "integer")
-            ).parquet(target_path)
-            .filter(F.col(ID_BUCKET_COL).isin(affected))
-            .drop(ID_BUCKET_COL)
-        )
-    else:
-        existing = spark.createDataFrame([], studies_schema())
-
-    incoming = _as_study_row(latest, existing)
-    keys = incoming.select("aggregator_identifier")
-    kept = existing.join(keys, "aggregator_identifier", "left_anti")
-    merged = kept.unionByName(incoming).withColumn(ID_BUCKET_COL, _id_bucket())
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.repartition(ID_BUCKET_COL)
-         .write.mode("overwrite").partitionBy(ID_BUCKET_COL).parquet(target_path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if epoch_id is not None:
-        _write_epoch(target_path, epoch_id)
-
-
 def merge_batch_versioned(batch: DataFrame, table_path: str,
                           quarantine_path: str | None = None,
                           epoch_id: int | None = None) -> None:
-    """MERGE sink over the VERSIONED TABLE (round-6 task: one publish
-    discipline, not two): each microbatch commits ONE snapshot version via
+    """MERGE sink over the VERSIONED TABLE, the one corpus store: each
+    microbatch commits ONE snapshot version via
     ``versioned_table.merge_keys`` — file-granular copy-on-write, so after
     a key-clustered compact the merge rewrites only the files the batch's
-    key range touches. What the marker-file sinks above can't give, this
-    one does for free:
+    key range touches. The equivalent Delta form is ``MERGE INTO studies
+    USING batch ON key WHEN MATCHED ... WHEN NOT MATCHED INSERT``. An empty
+    table is created at ``table_path`` on the first merge. Malformed events
+    are appended to ``quarantine_path`` when given, dropped otherwise.
 
     - exactly-once via the epoch riding the manifest's bounded
       recent-epoch set (vacuum-safe, no side-channel file);
@@ -249,6 +122,8 @@ def merge_batch_versioned(batch: DataFrame, table_path: str,
     from ..sources import versioned_table as VT
 
     spark = batch.sparkSession
+    if not VT.is_table(table_path):
+        VT.create(spark.createDataFrame([], studies_schema()), table_path)
     if epoch_id is not None and VT.epoch_committed(table_path, epoch_id):
         return
     batch, bad = split_quarantine(batch)
@@ -332,15 +207,13 @@ def start_ingest_versioned(spark: SparkSession, source_dir: str,
                            watermark: str = "1 hour",
                            available_now: bool = True,
                            metrics_view_path: str | None = None):
-    """``start_ingest`` with the versioned table as the corpus store.
-    Initializes an empty v0 snapshot if the table doesn't exist yet.
-    With ``metrics_view_path`` set, every microbatch also advances the
-    maintained /metrics view (atomic JSON state next to the table);
-    the refresh is version-gated so a replayed epoch is a no-op."""
-    from ..sources import versioned_table as VT
-
-    if not os.path.exists(os.path.join(table_path, "_VERSION")):
-        VT.create(spark.createDataFrame([], studies_schema()), table_path)
+    """File-source harvest stream → watermarked dedup → the versioned-table
+    merge sink (``merge_batch_versioned``, which creates the table on its
+    first batch). ``available_now=True`` drains what's present and stops
+    (test/batch-up mode); ``False`` runs continuously with the default
+    trigger. With ``metrics_view_path`` set, every microbatch also
+    advances the maintained /metrics view (atomic JSON state next to the
+    table); the refresh is version-gated so a replayed epoch is a no-op."""
 
     def _sink(df: DataFrame, epoch) -> None:
         merge_batch_versioned(df, table_path, epoch_id=int(epoch))
@@ -359,41 +232,6 @@ def start_ingest_versioned(spark: SparkSession, source_dir: str,
     )
     writer = (
         stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_bucketed_corpus(spark: SparkSession, target_path: str) -> DataFrame:
-    """Read either corpus layout back as studies-schema rows (``drop`` of a
-    missing partition column is a no-op on the flat layout)."""
-    return spark.read.parquet(target_path).drop(ID_BUCKET_COL)
-
-
-def start_ingest(spark: SparkSession, source_dir: str, target_path: str,
-                 checkpoint_dir: str, watermark: str = "1 hour",
-                 available_now: bool = True, bucketed: bool = True):
-    """File-source harvest stream → watermarked dedup → merge sink.
-
-    ``available_now=True`` drains what's present and stops (test/batch-up
-    mode); ``False`` runs continuously with the default trigger. The sink is
-    the partition-pruned bucketed merge by default — batch-sized I/O per
-    microbatch; pass ``bucketed=False`` for the flat full-rewrite layout."""
-    merge = merge_batch_bucketed if bucketed else merge_batch
-    stream = (
-        spark.readStream.schema(harvest_event_schema())
-        .option("maxFilesPerTrigger", 16)
-        .parquet(source_dir)
-        .withWatermark("harvest_ts", watermark)
-        .dropDuplicates(["aggregator_identifier", "harvest_ts"])
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, epoch: merge(df, target_path, epoch_id=epoch)
-        )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
     )
@@ -507,8 +345,8 @@ def streaming_pattern_counts(spark: SparkSession, source_dir: str,
     Ordering contract: rows are processed in (ts, event_id) order within
     each batch, and batches must arrive in event-time order per key (the
     file source's list order; a production deployment fronts this with
-    the watermarked dedup stage like start_ingest does). The test pins
-    stream-final counts to the oracle-checked batch operator."""
+    the watermarked dedup stage like start_ingest_versioned does). The
+    test pins stream-final counts to the oracle-checked batch operator."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -16,8 +16,8 @@ Scale design: per batch the cluster sees one Arrow-batched pass over the
 batch's rows; what leaves the executors is ≤ partitions × k tiny
 (count, sum-vector) rows, and the persisted state is k centroids + k
 counts + the last applied epoch — kilobytes, independent of stream
-volume. Epoch guarding makes retried foreachBatch deliveries no-ops (the
-same exactly-once realization as `ingest.merge_batch`)."""
+volume. Epoch guarding makes retried foreachBatch deliveries no-ops: the
+state records the last applied epoch and a replayed one is skipped."""
 
 from __future__ import annotations
 

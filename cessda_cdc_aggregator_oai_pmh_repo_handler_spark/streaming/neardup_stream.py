@@ -24,8 +24,7 @@ Scale design:
   index is additionally bucketed by its join key on write, making probes
   co-located scans with partition pruning on ``band``.
 - Appends are append-only parquet — no rewrite of existing index files
-  per batch (contrast ``ingest.merge_batch``'s documented full-rewrite
-  fallback). Restarted batches re-probe idempotently: accepted doc_ids
+  per batch. Restarted batches re-probe idempotently: accepted doc_ids
   are re-derived from the batch content, and duplicate index rows for the
   same doc_id are harmless (the verify join is on doc_id equality and
   candidate pairs are distinct-ed).
@@ -188,6 +187,23 @@ def process_batch(spark: SparkSession, batch: DataFrame, index_path: str,
         .parquet(os.path.join(index_path, SHINGLES))
 
 
+def _epoch_marker(target_path: str) -> str:
+    return f"{target_path}._last_epoch"
+
+
+def _read_epoch(target_path: str) -> int:
+    try:
+        with open(_epoch_marker(target_path)) as f:
+            return int(f.read().strip())
+    except (FileNotFoundError, ValueError):
+        return -1
+
+
+def _write_epoch(target_path: str, epoch_id: int) -> None:
+    with open(_epoch_marker(target_path), "w") as f:
+        f.write(str(epoch_id))
+
+
 def start_neardup_stream(spark: SparkSession, source_dir: str, index_path: str,
                          accepted_path: str, checkpoint: str,
                          rejected_path: str | None = None,
@@ -195,14 +211,13 @@ def start_neardup_stream(spark: SparkSession, source_dir: str, index_path: str,
     """Continuous curation: readStream over the document drop directory →
     per-batch near-dup gate against the persisted index.
 
-    Replay-idempotent via the same epoch-marker protocol as
-    ``ingest.merge_batch``: the sinks here are parquet APPENDS, so a
-    foreachBatch retry of an already-committed epoch would double-append
-    accepted rows AND double-extend the index — the marker makes the
-    retry a no-op (exactly-once effect; in production the marker write is
+    Replay-idempotent via an epoch marker: a ``._last_epoch`` file beside
+    ``accepted_path`` holds the last applied epoch. The sinks here are
+    parquet APPENDS, so a foreachBatch retry of an already-committed epoch
+    would double-append accepted rows AND double-extend the index — the
+    marker makes the retry a no-op (exactly-once effect; in production the marker write is
     a transactional commit alongside the sink, e.g. a Delta txn)."""
     from .dedup_stream import DOC_STREAM_SCHEMA
-    from .ingest import _read_epoch, _write_epoch
 
     def _once(batch: DataFrame, epoch_id: int) -> None:
         if epoch_id <= _read_epoch(accepted_path):

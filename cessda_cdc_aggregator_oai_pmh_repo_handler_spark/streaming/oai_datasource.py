@@ -12,7 +12,7 @@ The BASELINE's "custom source" realized the Spark-native way: the
           .option("url", ...).load())                           # poll per batch
 
 Rows come out in ``harvest_event_schema`` (studies schema + action +
-harvest_ts), ready for ``ingest.merge_batch_bucketed`` — batch and
+harvest_ts), ready for ``ingest.merge_batch_versioned`` — batch and
 streaming share the sweep code.
 
 Execution placement: the batch ``read`` runs on an EXECUTOR (options are

@@ -6,9 +6,9 @@ side: poll an HTTP endpoint's ListRecords, follow resumption tokens to
 exhaustion (the OAI 2.0 exclusive-token contract: a follow-up request
 carries ONLY verb + resumptionToken), parse each page with
 ``harvester.parse_list_records``, and land the events as parquet batches in
-the directory ``ingest.start_ingest``'s file stream reads. The poller is a
-tiny driver-side loop — pages are bounded by the endpoint's list size — and
-everything heavy (watermark dedup, upsert/tombstone merge) happens in the
+the directory ``ingest.start_ingest_versioned``'s file stream reads. The
+poller is a tiny driver-side loop — pages are bounded by the endpoint's list
+size — and everything heavy (watermark dedup, upsert/tombstone merge) happens in the
 stream behind it.
 
 Scale shape: one poller per source endpoint, each writing page-sized
@@ -146,9 +146,11 @@ def harvest_endpoint_to_corpus(spark: SparkSession, base_url: str,
                                poller: OAIPMHPoller | None = None) -> str:
     """Convenience end-to-end: poll ``base_url`` to exhaustion, stream the
     landed events through the watermarked ingest merge, return the corpus
-    path. ``work_dir`` holds the landing/checkpoint/corpus directories."""
+    path (a versioned table). ``work_dir`` holds the
+    landing/checkpoint/corpus directories."""
+    from ..sources import versioned_table as VT
     from ..sources.studies import studies_schema
-    from .ingest import start_ingest
+    from .ingest import start_ingest_versioned
 
     run = uuid.uuid4().hex[:8]
     events_dir = f"{work_dir}/events-{run}"
@@ -157,10 +159,10 @@ def harvest_endpoint_to_corpus(spark: SparkSession, base_url: str,
     p = poller or OAIPMHPoller(base_url, metadata_prefix=metadata_prefix)
     landed = p.poll_once(spark, events_dir, harvest_ts=harvest_ts)
     if landed:
-        q = start_ingest(spark, events_dir, corpus, checkpoint)
+        q = start_ingest_versioned(spark, events_dir, corpus, checkpoint)
         q.awaitTermination()
     else:
         # a sweep matching nothing must still yield a readable (empty)
         # corpus, not a dangling path
-        spark.createDataFrame([], studies_schema()).write.parquet(corpus)
+        VT.create(spark.createDataFrame([], studies_schema()), corpus)
     return corpus

@@ -14,10 +14,9 @@ SOURCE`` equivalent, expressed on plain parquet):
   compare stably);
 - closed history rows pass through UNTOUCHED — at 100 TB with the target
   partitioned on ``is_current`` the merge never rewrites history
-  partitions, only the current one (the merge_batch_bucketed pruning
-  argument applied to time);
-- the rewrite lands via staging-dir + atomic rename (merge_batch's
-  crash-safety contract).
+  partitions, only the current one (partition pruning applied to time);
+- the rewrite lands via staging-dir + atomic rename, so a crash leaves
+  either the old or the new target, never a half-written one.
 
 Rows carry (``valid_from``, ``valid_to``, ``is_current``); a key's history
 is contiguous: each version's ``valid_to`` equals its successor's

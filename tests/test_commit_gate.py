@@ -1,6 +1,7 @@
 """The commit gate's AST checks: every corpus or session memo lives in the
 one registry (sources/tables.corpus_memo), never in a module-level
-``*_CACHE`` dict; and no tool puts a literal absolute path on sys.path."""
+``*_CACHE`` dict; and no tool or test puts a literal absolute path on
+sys.path."""
 
 from __future__ import annotations
 
@@ -22,6 +23,7 @@ def test_stray_cache_dict_is_flagged():
 
 
 def test_tools_have_no_literal_sys_path():
+    # scans tools/, tests/ and bench.py
     assert check_literal_sys_path(list(iter_sources())) == []
 
 
@@ -31,3 +33,13 @@ def test_literal_sys_path_is_flagged():
            'sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))\n'
            'sys.path.append("relative/dir")\n')
     assert len(literal_sys_path_problems(src, "t.py")) == 1
+
+
+def test_literal_sys_path_in_a_test_file_is_flagged(tmp_path):
+    src = 'import sys\nsys.path.insert(0, "/srv/other-checkout")\n'
+    for sub in ("tests", "docs"):
+        (tmp_path / sub).mkdir()
+        (tmp_path / sub / "test_x.py").write_text(src)
+    paths = [tmp_path / "tests" / "test_x.py", tmp_path / "docs" / "test_x.py"]
+    problems = check_literal_sys_path(paths, root=tmp_path)
+    assert len(problems) == 1 and "tests" in problems[0]

@@ -2,12 +2,13 @@
 
     live OAI-PMH endpoint (3 resumption pages)
       → poller lands events
-      → streaming merge builds the corpus
+      → streaming merge builds the versioned-table corpus
       → a SECOND sweep carries an UPDATE and a DELETE
       → incremental merge (same checkpoint, only new files)
       → the merged corpus serves ListRecords pages over HTTP,
         /metrics moves, and oai_ddi25 XML carries the updated field,
-        with deletes visible as header-only deleted records.
+        with deletes visible as header-only deleted records;
+      → the pre-sweep version still serves the old state (time travel).
 
 Mirrors the reference ecosystem's harvester → DocStore → serve cycle
 (/root/reference README: the aggregator sits between harvested sources
@@ -24,11 +25,12 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.server import OAIHTTPS
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import (
     OAIQueryPlanner,
 )
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import versioned_table as VT
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import (
     _record, _ts, fixture_records, fixture_studies, studies_schema,
 )
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.ingest import (
-    harvest_event_schema, read_bucketed_corpus, start_ingest,
+    harvest_event_schema, merge_batch_versioned, start_ingest_versioned,
 )
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.oai_source import (
     OAIPMHPoller,
@@ -68,12 +70,18 @@ def _sweep2_records() -> list[dict]:
     return list(recs.values())
 
 
-def test_full_lifecycle_harvest_update_delete_serve(spark, tmp_path):
+def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
+    """The harvest→merge→serve cycle over the versioned table, the one
+    corpus store. Each microbatch commits one snapshot, so O2 snapshot
+    paging, CDC and time travel hold over the LIVE studies corpus: after
+    the update+delete sweep, the pre-sweep version still serves the old
+    state."""
     events_dir = str(tmp_path / "events")
-    corpus_path = str(tmp_path / "corpus")
+    table_path = str(tmp_path / "vt_corpus")
     ckpt = str(tmp_path / "ckpt")
 
-    # --- sweep 1: harvest the 8 fixtures over 3 resumption pages ---------
+    # sweep 1: harvest the 8 fixtures over 3 resumption pages, merge into
+    # the versioned table
     src = OAIHTTPServer(
         OAIFacade(OAIQueryPlanner(fixture_studies(spark), page_size=3)),
         port=0).start()
@@ -84,15 +92,21 @@ def test_full_lifecycle_harvest_update_delete_serve(spark, tmp_path):
         assert poller.poll_once(spark, events_dir, harvest_ts=T1) == 8
     finally:
         src.stop()
-    start_ingest(spark, events_dir, corpus_path, ckpt).awaitTermination()
+    view_path = str(tmp_path / "metrics_view.json")
+    start_ingest_versioned(spark, events_dir, table_path, ckpt,
+                           metrics_view_path=view_path).awaitTermination()
+    v1 = VT.current_version(table_path)
+    import time as _time
+
+    t_between_sweeps = _time.time()
     rows = {r["aggregator_identifier"]: r
-            for r in read_bucketed_corpus(spark, corpus_path).collect()}
+            for r in VT.read(spark, table_path).collect()}
     assert len(rows) == 8
     assert {t["value"] for t in rows["agg_id_3"]["study_titles"]} == \
         {"Title of agg_id_3", "Otsikko agg_id_3"}
     assert rows["agg_id_1"]["metadata"]["status"] == "created"
 
-    # --- sweep 2: the source moved on (update + delete); incremental merge
+    # sweep 2: update + delete, incremental merge (same checkpoint)
     src2_df = spark.createDataFrame(_sweep2_records(), schema=studies_schema())
     src2 = OAIHTTPServer(
         OAIFacade(OAIQueryPlanner(src2_df, page_size=3)), port=0).start()
@@ -102,10 +116,11 @@ def test_full_lifecycle_harvest_update_delete_serve(spark, tmp_path):
             spark, events_dir, harvest_ts=T2) == 8
     finally:
         src2.stop()
-    # same checkpoint: the file source processes ONLY sweep 2's files
-    start_ingest(spark, events_dir, corpus_path, ckpt).awaitTermination()
+    start_ingest_versioned(spark, events_dir, table_path, ckpt,
+                           metrics_view_path=view_path).awaitTermination()
 
-    corpus = read_bucketed_corpus(spark, corpus_path)
+    v2 = VT.current_version(table_path)
+    corpus = VT.read(spark, table_path, version=v2)
     rows = {r["aggregator_identifier"]: r for r in corpus.collect()}
     assert len(rows) == 8  # update + delete, no duplicates
     assert [t["value"] for t in rows["agg_id_3"]["study_titles"]] == \
@@ -114,9 +129,33 @@ def test_full_lifecycle_harvest_update_delete_serve(spark, tmp_path):
     assert rows["agg_id_1"]["metadata"]["deleted"] == T2
     assert rows["agg_id_2"]["metadata"]["status"] == "deleted"  # from sweep 1
 
-    # --- serve the merged corpus over HTTP --------------------------------
-    srv = OAIHTTPServer(
-        OAIFacade(OAIQueryPlanner(corpus, page_size=3)), port=0).start()
+    # TIME TRAVEL across the ingest batch (SURVEY §2.5 O2, the Delta
+    # "VERSION AS OF" idiom): the pre-sweep-2 snapshot is intact
+    old = {r["aggregator_identifier"]: r
+           for r in VT.read(spark, table_path, version=v1).collect()}
+    assert len(old) == 8
+    assert {t["value"] for t in old["agg_id_3"]["study_titles"]} == \
+        {"Title of agg_id_3", "Otsikko agg_id_3"}
+    assert old["agg_id_1"]["metadata"]["status"] == "created"
+
+    # CDC between the two snapshots: sweep 2 re-upserted every record
+    # (metadata.updated moved to T2 on all 8), so the feed carries a
+    # delete+insert pair per key; the inserts show the new state
+    feed = VT.table_changes(spark, table_path, v1,
+                            VT.current_version(table_path)).collect()
+    inserts = {r["aggregator_identifier"]: r for r in feed
+               if r["_change"] == "insert"}
+    deletes = {r["aggregator_identifier"] for r in feed
+               if r["_change"] == "delete"}
+    assert set(inserts) == deletes == {f"agg_id_{i}" for i in range(1, 9)}
+    assert [t["value"] for t in inserts["agg_id_3"]["study_titles"]] == \
+        ["Updated title 3"]
+    assert inserts["agg_id_1"]["metadata"]["status"] == "deleted"
+
+    # the merged head serves over HTTP
+    srv = OAIHTTPServer(OAIFacade(OAIQueryPlanner(
+        corpus, page_size=3, vt_path=table_path, vt_version=v2)),
+        port=0).start()
     try:
         # metrics BEFORE: corpus totals; requests counter baseline
         _, m0 = _http(srv.port, "/metrics")
@@ -148,11 +187,10 @@ def test_full_lifecycle_harvest_update_delete_serve(spark, tmp_path):
         assert deleted == {"agg_id_1", "agg_id_2"}  # header-only deletes
 
         # ddi25 XML carries the sweep-2 update
-        _, ddi = _http(
-            srv.port,
-            "/v0/oai?verb=GetRecord&identifier=agg_id_3"
+        _, body = _http(
+            srv.port, "/v0/oai?verb=GetRecord&identifier=agg_id_3"
             "&metadataPrefix=oai_ddi25")
-        el = ET.fromstring(ddi)
+        el = ET.fromstring(body)
         titles = el.findall(
             "./oai:GetRecord/oai:record/oai:metadata/ddi:codeBook"
             "/ddi:stdyDscr/ddi:citation/ddi:titlStmt/ddi:titl", NS)
@@ -174,108 +212,7 @@ def test_full_lifecycle_harvest_update_delete_serve(spark, tmp_path):
     finally:
         srv.stop()
 
-
-def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
-    """Round-6 task: the SAME harvest→merge→serve cycle with the versioned
-    table as the corpus store — one publish discipline. Each microbatch
-    commits one snapshot, so O2 snapshot paging, CDC and time travel hold
-    over the LIVE studies corpus: after the update+delete sweep, the
-    pre-sweep version still serves the old state."""
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
-        versioned_table as VT,
-    )
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.ingest import (
-        start_ingest_versioned,
-    )
-
-    events_dir = str(tmp_path / "events")
-    table_path = str(tmp_path / "vt_corpus")
-    ckpt = str(tmp_path / "ckpt")
-
-    # sweep 1: harvest the 8 fixtures, merge into the versioned table
-    src = OAIHTTPServer(
-        OAIFacade(OAIQueryPlanner(fixture_studies(spark), page_size=3)),
-        port=0).start()
-    try:
-        base = f"http://127.0.0.1:{src.port}/v0/oai"
-        assert OAIPMHPoller(base).poll_once(
-            spark, events_dir, harvest_ts=T1) == 8
-    finally:
-        src.stop()
-    view_path = str(tmp_path / "metrics_view.json")
-    start_ingest_versioned(spark, events_dir, table_path, ckpt,
-                           metrics_view_path=view_path).awaitTermination()
-    v1 = VT.current_version(table_path)
-    import time as _time
-
-    t_between_sweeps = _time.time()
-    rows = {r["aggregator_identifier"]: r
-            for r in VT.read(spark, table_path).collect()}
-    assert len(rows) == 8
-    assert rows["agg_id_1"]["metadata"]["status"] == "created"
-
-    # sweep 2: update + delete, incremental merge (same checkpoint)
-    src2_df = spark.createDataFrame(_sweep2_records(), schema=studies_schema())
-    src2 = OAIHTTPServer(
-        OAIFacade(OAIQueryPlanner(src2_df, page_size=3)), port=0).start()
-    try:
-        base2 = f"http://127.0.0.1:{src2.port}/v0/oai"
-        assert OAIPMHPoller(base2).poll_once(
-            spark, events_dir, harvest_ts=T2) == 8
-    finally:
-        src2.stop()
-    start_ingest_versioned(spark, events_dir, table_path, ckpt,
-                           metrics_view_path=view_path).awaitTermination()
-
-    corpus = VT.read(spark, table_path)
-    rows = {r["aggregator_identifier"]: r for r in corpus.collect()}
-    assert len(rows) == 8
-    assert [t["value"] for t in rows["agg_id_3"]["study_titles"]] == \
-        ["Updated title 3"]
-    assert rows["agg_id_1"]["metadata"]["status"] == "deleted"
-
-    # TIME TRAVEL across the ingest batch (SURVEY §2.5 O2, the Delta
-    # "VERSION AS OF" idiom): the pre-sweep-2 snapshot is intact
-    old = {r["aggregator_identifier"]: r
-           for r in VT.read(spark, table_path, version=v1).collect()}
-    assert len(old) == 8
-    assert {t["value"] for t in old["agg_id_3"]["study_titles"]} == \
-        {"Title of agg_id_3", "Otsikko agg_id_3"}
-    assert old["agg_id_1"]["metadata"]["status"] == "created"
-
-    # CDC between the two snapshots: sweep 2 re-upserted every record
-    # (metadata.updated moved to T2 on all 8), so the feed carries a
-    # delete+insert pair per key; the inserts show the new state
-    feed = VT.table_changes(spark, table_path, v1,
-                            VT.current_version(table_path)).collect()
-    inserts = {r["aggregator_identifier"]: r for r in feed
-               if r["_change"] == "insert"}
-    deletes = {r["aggregator_identifier"] for r in feed
-               if r["_change"] == "delete"}
-    assert set(inserts) == deletes == {f"agg_id_{i}" for i in range(1, 9)}
-    assert [t["value"] for t in inserts["agg_id_3"]["study_titles"]] == \
-        ["Updated title 3"]
-    assert inserts["agg_id_1"]["metadata"]["status"] == "deleted"
-
-    # the merged head serves over HTTP exactly like the directory layouts
-    srv = OAIHTTPServer(
-        OAIFacade(OAIQueryPlanner(corpus, page_size=5)), port=0).start()
-    try:
-        _, body = _http(
-            srv.port, "/v0/oai?verb=GetRecord&identifier=agg_id_3"
-            "&metadataPrefix=oai_ddi25")
-        el = ET.fromstring(body)
-        titles = el.findall(
-            "./oai:GetRecord/oai:record/oai:metadata/ddi:codeBook"
-            "/ddi:stdyDscr/ddi:citation/ddi:titlStmt/ddi:titl", NS)
-        assert [t.text for t in titles] == ["Updated title 3"]
-    finally:
-        srv.stop()
-
     # replayed epoch is a no-op (epoch rides the manifest, not a marker)
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.ingest import (
-        merge_batch_versioned,
-    )
     v_before = VT.current_version(table_path)
     merge_batch_versioned(
         spark.createDataFrame([], schema=harvest_event_schema()),

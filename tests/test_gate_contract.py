@@ -14,6 +14,7 @@ tests convert "the driver found an empty gate" into a local red test:
 
 from __future__ import annotations
 
+import pathlib
 import subprocess
 import sys
 
@@ -21,6 +22,8 @@ import __spark_entry__ as entry_mod
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import multimodal
 
 GATE_SIZE = 50
+REPO = pathlib.Path(__file__).resolve().parent.parent
+OPERATORS = REPO / "cessda_cdc_aggregator_oai_pmh_repo_handler_spark" / "operators"
 
 
 def test_gate_declares_exactly_50_queries_with_oracles():
@@ -40,10 +43,7 @@ def test_import_executes_no_codec():
     """Importing the entry module (and the multimodal operator) must not run
     any encoder/decoder: a subprocess stubs the codec primitives to raise
     BEFORE importing, and the import must still succeed."""
-    script = r"""
-import sys
-sys.path.insert(0, "/root/repo")
-
+    script = f"import sys\nsys.path.insert(0, {str(REPO)!r})\n" + r"""
 # Poison the codec layer before anything imports it.
 import cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators.jpeg as J
 
@@ -102,12 +102,9 @@ def test_no_merge_order_sensitive_moments_in_operators():
     call a double moment-sketch aggregate — AST walk, so docstrings and
     comments don't false-positive."""
     import ast
-    import pathlib
 
-    opdir = pathlib.Path(
-        "/root/repo/cessda_cdc_aggregator_oai_pmh_repo_handler_spark/operators")
     offenders = []
-    for path in sorted(opdir.glob("*.py")):
+    for path in sorted(OPERATORS.glob("*.py")):
         tree = ast.parse(path.read_text())
         for node in ast.walk(tree):
             if isinstance(node, ast.Attribute) and (
@@ -123,18 +120,14 @@ def test_no_float_sum_in_hashed_inertia_or_oracles():
     """Companion source asserts: the kmeans inertia and the stats/regr
     oracles must accumulate exactly (floor-to-integer before the sum, or
     HUGEINT/DECIMAL sums), never round(sum(double))."""
-    import pathlib
-
-    base = pathlib.Path(
-        "/root/repo/cessda_cdc_aggregator_oai_pmh_repo_handler_spark/operators")
-    clustering = (base / "clustering.py").read_text()
+    clustering = (OPERATORS / "clustering.py").read_text()
     assert 'F.round(F.sum("dist_sq"' not in clustering
     assert "round(sum(dist)" not in clustering
-    rel = (base / "relational_ext.py").read_text()
+    rel = (OPERATORS / "relational_ext.py").read_text()
     for banned in ("round(stddev_samp", "round(corr(", "round(covar_samp",
                    "round(regr_"):
         assert banned not in rel, banned
-    ta = (base / "text_analysis.py").read_text()
+    ta = (OPERATORS / "text_analysis.py").read_text()
     assert "stddev_samp(n_chars) OVER" not in ta
 
 

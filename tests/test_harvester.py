@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.facade import OAIFacade
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import OAIQueryPlanner
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import versioned_table as VT
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming import harvester as H
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming import ingest as I
@@ -37,8 +38,8 @@ def harvested(spark, tmp_path_factory):
         token = tok_el.text if tok_el is not None and tok_el.text else None
         if token is None:
             break
-    I.merge_batch(H.events_df(spark, events), target)
-    return spark.read.parquet(target)
+    I.merge_batch_versioned(H.events_df(spark, events), target)
+    return VT.read(spark, target)
 
 
 def test_all_records_harvested(harvested):

@@ -3,6 +3,7 @@ AsyncHTTPTestCase layer, /root/reference/tests/test_serve.py)."""
 
 from __future__ import annotations
 
+import os
 import random
 import types
 import urllib.error
@@ -21,7 +22,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import yaml_sets
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 
 NS = {"oai": "http://www.openarchives.org/OAI/2.0/"}
-DATA = "/root/repo/tests/data"
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
 @pytest.fixture(scope="module")
@@ -81,6 +82,14 @@ def test_metrics_endpoint(server):
     assert any(l.startswith('publishers_counts{publisher="http://services.fsd') for l in lines)
     assert any(l.startswith("requests_total") for l in lines)
     assert any('requests_per_user_agent{harvester="pytest-harvester"}' in l for l in lines)
+
+
+def test_user_agent_label_is_escaped(server):
+    """A backslash or quote in the User-Agent must not break the exposition
+    line: the label is escaped like the publisher labels."""
+    fetch(server, "/v0/oai?verb=Identify", ua='a\\b"c')
+    _, _, body = fetch(server, "/metrics")
+    assert r'requests_per_user_agent{harvester="a\\b\"c"} 1.0' in body.splitlines()
 
 
 def test_unknown_path_404(server):

@@ -1,13 +1,10 @@
-"""Operational ingest hygiene: quarantine channel + compaction."""
+"""Operational ingest hygiene: quarantine channel + exactly-once epochs."""
 
 from __future__ import annotations
 
 import datetime
 
-import pytest
-from pyspark.sql import functions as F
-
-from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import compaction as C
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import versioned_table as VT
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_records
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming import ingest as I
 
@@ -33,8 +30,8 @@ def test_quarantine_channel(spark, tmp_path):
         _event(recs[3], "upsert", "2020-01-01T00:00:00Z", ident=""),     # empty key
     ]
     df = spark.createDataFrame(events, I.harvest_event_schema())
-    I.merge_batch(df, target, quarantine_path=quarantine)
-    assert spark.read.parquet(target).count() == 1
+    I.merge_batch_versioned(df, target, quarantine_path=quarantine)
+    assert VT.read(spark, target).count() == 1
     bad = spark.read.parquet(quarantine)
     assert bad.count() == 3
     assert {r["action"] for r in bad.collect()} == {"upsert", "frobnicate"}
@@ -47,8 +44,8 @@ def test_merge_without_quarantine_drops_bad(spark, tmp_path):
         [_event(recs[0], "upsert", "2020-01-01T00:00:00Z"),
          _event(recs[1], "nonsense", "2020-01-01T00:00:00Z")],
         I.harvest_event_schema())
-    I.merge_batch(df, target)
-    assert spark.read.parquet(target).count() == 1
+    I.merge_batch_versioned(df, target)
+    assert VT.read(spark, target).count() == 1
 
 
 def test_merge_epoch_idempotence(spark, tmp_path):
@@ -58,102 +55,23 @@ def test_merge_epoch_idempotence(spark, tmp_path):
     recs = fixture_records()
     b1 = spark.createDataFrame(
         [_event(recs[0], "upsert", "2020-01-01T00:00:00Z")], I.harvest_event_schema())
-    I.merge_batch(b1, target, epoch_id=0)
-    assert spark.read.parquet(target).count() == 1
+    I.merge_batch_versioned(b1, target, epoch_id=0)
+    assert VT.read(spark, target).count() == 1
 
     # replay epoch 0 with a DIFFERENT payload: must not apply
     b1_replay = spark.createDataFrame(
         [_event(dict(recs[0], study_number="should_not_apply"), "upsert",
                 "2020-01-02T00:00:00Z")], I.harvest_event_schema())
-    I.merge_batch(b1_replay, target, epoch_id=0)
-    assert spark.read.parquet(target).first()["study_number"] == "study_agg_id_1"
+    I.merge_batch_versioned(b1_replay, target, epoch_id=0)
+    assert VT.read(spark, target).first()["study_number"] == "study_agg_id_1"
 
     # epoch 1 applies
-    I.merge_batch(
+    I.merge_batch_versioned(
         spark.createDataFrame(
             [_event(recs[1], "upsert", "2020-01-03T00:00:00Z")],
             I.harvest_event_schema()),
         target, epoch_id=1)
-    assert spark.read.parquet(target).count() == 2
-
-
-def test_compaction_reduces_files(spark, tmp_path):
-    path = str(tmp_path / "fragmented")
-    # simulate many tiny merge outputs
-    for i in range(6):
-        (spark.range(i * 100, (i + 1) * 100)
-         .withColumn("v", F.col("id") * 2)
-         .write.mode("append").parquet(path))
-    before = C.parquet_file_count(path)
-    assert before >= 6
-    after = C.compact(spark, path, target_mb=128)
-    assert after < before
-    df = spark.read.parquet(path)
-    assert df.count() == 600
-    assert df.agg(F.sum("v")).first()[0] == sum(2 * i for i in range(600))
-
-
-def test_cleanup_stale_dirs(spark, tmp_path):
-    import os
-
-    target = str(tmp_path / "corpus")
-    recs = fixture_records()
-    I.merge_batch(
-        spark.createDataFrame([_event(recs[0], "upsert", "2020-01-01T00:00:00Z")],
-                              I.harvest_event_schema()), target)
-    os.makedirs(f"{target}.staging-deadbeef")
-    os.makedirs(f"{target}.old-cafebabe")
-    removed = C.cleanup_stale(target)
-    assert len(removed) == 2
-    assert os.path.exists(target)  # live dir untouched
-    assert not os.path.exists(f"{target}.staging-deadbeef")
-
-
-def test_compaction_preserves_partitioning(spark, tmp_path):
-    path = str(tmp_path / "part")
-    df = spark.range(1000).withColumn("bucket", (F.col("id") % 4).cast("int"))
-    for _ in range(3):
-        df.write.mode("append").partitionBy("bucket").parquet(path)
-    C.compact(spark, path, partition_col="bucket", target_mb=128)
-    out = spark.read.parquet(path)
-    assert out.count() == 3000
-    assert sorted(r["bucket"] for r in out.select("bucket").distinct().collect()) == [
-        0, 1, 2, 3]
-    import glob
-
-    assert glob.glob(f"{path}/bucket=*"), "partition directories preserved"
-
-
-def test_bucketed_merge_quarantine_and_epoch(spark, tmp_path):
-    """The bucketed merge (start_ingest default) carries the same hygiene as
-    the flat path: malformed events divert to quarantine, replayed epochs
-    are no-ops, newer epochs apply."""
-    target = str(tmp_path / "corpus")
-    quarantine = str(tmp_path / "rejects")
-    recs = fixture_records()
-    b1 = spark.createDataFrame(
-        [_event(recs[0], "upsert", "2020-01-01T00:00:00Z"),
-         _event(recs[1], "frobnicate", "2020-01-01T00:00:00Z")],
-        I.harvest_event_schema())
-    I.merge_batch_bucketed(b1, target, quarantine_path=quarantine, epoch_id=0)
-    assert I.read_bucketed_corpus(spark, target).count() == 1
-    assert spark.read.parquet(quarantine).count() == 1
-
-    # replay epoch 0 with a different payload: must not apply
-    replay = spark.createDataFrame(
-        [_event(dict(recs[0], study_number="should_not_apply"), "upsert",
-                "2020-01-02T00:00:00Z")], I.harvest_event_schema())
-    I.merge_batch_bucketed(replay, target, epoch_id=0)
-    assert (I.read_bucketed_corpus(spark, target).first()["study_number"]
-            == "study_agg_id_1")
-
-    # epoch 1 applies
-    I.merge_batch_bucketed(
-        spark.createDataFrame(
-            [_event(recs[1], "upsert", "2020-01-03T00:00:00Z")],
-            I.harvest_event_schema()),
-        target, epoch_id=1)
-    assert I.read_bucketed_corpus(spark, target).count() == 2
+    assert VT.read(spark, target).count() == 2
 
 
 def test_parquet_schema_evolution_merge_schema(spark, tmp_path):

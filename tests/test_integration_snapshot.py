@@ -13,6 +13,7 @@ import datetime
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import (
     OAIQueryPlanner, finalize_token,
 )
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import versioned_table as VT
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_records
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming import ingest as I
 
@@ -29,14 +30,16 @@ def test_open_token_survives_concurrent_ingest(spark, tmp_path):
     recs = fixture_records()
 
     # wave 1: five records land before the request snapshot
-    I.merge_batch(
+    I.merge_batch_versioned(
         spark.createDataFrame(
             [_event(r, "upsert", "2020-01-01T00:00:00Z") for r in recs[:5]],
             I.harvest_event_schema()),
         target)
 
     def planner():
-        return OAIQueryPlanner(spark.read.parquet(target), page_size=2)
+        # the newest version, and no vt_path: the walk's only guard is the
+        # timestamp bound, not a pinned version
+        return OAIQueryPlanner(VT.read(spark, target), page_size=2)
 
     snapshot = "2020-06-01 00:00:00"
     page1 = planner().list_page("oai_dc", request_ts=snapshot)
@@ -45,7 +48,7 @@ def test_open_token_survives_concurrent_ingest(spark, tmp_path):
     token = finalize_token(page1, rows1)
 
     # wave 2 AFTER the snapshot: two new records + an update to agg_id_4
-    I.merge_batch(
+    I.merge_batch_versioned(
         spark.createDataFrame(
             [_event(recs[5], "upsert", "2020-07-01T00:00:00Z"),
              _event(recs[6], "upsert", "2020-07-01T00:00:00Z"),
@@ -78,11 +81,8 @@ def test_vt_pinned_token_is_immune_to_concurrent_merge(spark, tmp_path):
     merge BETWEEN pages publishes a new version the open walk never sees.
     Stronger than the timestamp bound alone: the updated record stays in
     the list WITH ITS ORIGINAL CONTENT instead of drifting out."""
-    from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import (
-        versioned_table as VT,
-    )
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import (
-        fixture_records, studies_schema,
+        studies_schema,
     )
 
     target = str(tmp_path / "vt_corpus")

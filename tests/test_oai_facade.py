@@ -3,6 +3,7 @@ ElementTree-level assertions (/root/reference/tests/test_serve.py)."""
 
 from __future__ import annotations
 
+import os
 import threading
 import xml.etree.ElementTree as ET
 
@@ -13,7 +14,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import yaml_sets
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 
-DATA = "/root/repo/tests/data"
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 NOW = "2019-12-12 07:14:38"
 NS = {
     "oai": "http://www.openarchives.org/OAI/2.0/",

@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +21,7 @@ from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import (
 )
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import yaml_sets
 
-DATA = "/root/repo/tests/data"
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 NOW = "2019-12-12 07:14:38"
 
 

@@ -14,9 +14,10 @@ import pytest
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.facade import OAIFacade
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.server import OAIHTTPServer
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.plans.query_builder import OAIQueryPlanner
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import versioned_table as VT
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import fixture_studies
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.ingest import (
-    read_bucketed_corpus, start_ingest,
+    start_ingest_versioned,
 )
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.oai_source import (
     OAIPMHPoller, OAIProtocolError, harvest_endpoint_to_corpus,
@@ -73,7 +74,7 @@ def test_endpoint_to_corpus_to_listrecords(spark, source_server, tmp_path):
     corpus_path = harvest_endpoint_to_corpus(
         spark, base, str(tmp_path), harvest_ts=HARVEST_TS)
 
-    corpus = read_bucketed_corpus(spark, corpus_path)
+    corpus = VT.read(spark, corpus_path)
     rows = {r["aggregator_identifier"]: r for r in corpus.collect()}
     assert set(rows) == {f"agg_id_{i}" for i in range(1, 9)}
     # tombstone merged as logical delete with deleted timestamp (F9 input)
@@ -113,9 +114,10 @@ def test_repolling_is_idempotent(spark, source_server, tmp_path):
     n2 = poller.poll_once(spark, events_dir, harvest_ts=HARVEST_TS)
     assert n1 == n2 == 8
     corpus_path = str(tmp_path / "corpus")
-    q = start_ingest(spark, events_dir, corpus_path, str(tmp_path / "ckpt"))
+    q = start_ingest_versioned(spark, events_dir, corpus_path,
+                               str(tmp_path / "ckpt"))
     q.awaitTermination()
-    corpus = read_bucketed_corpus(spark, corpus_path)
+    corpus = VT.read(spark, corpus_path)
     assert corpus.count() == 8
 
 

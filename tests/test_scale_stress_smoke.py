@@ -5,9 +5,11 @@ via `python tools/scale_stress.py` (SCALING.md "Stress evidence")."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.operators import dedup
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.tables import (

@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources import versioned_table as VT
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.sources.studies import (
     fixture_records, studies_schema,
 )
@@ -31,16 +32,11 @@ def target(tmp_path):
     return str(tmp_path / "studies_corpus")
 
 
-def read_target(spark, target):
-    # handles both the flat and the bucketed (start_ingest default) layouts
-    return I.read_bucketed_corpus(spark, target)
-
-
 def test_merge_insert_then_update(spark, target):
     recs = fixture_records()
-    I.merge_batch(_events_df(spark, [_event(recs[0], "upsert", "2020-01-01T00:00:00Z")]),
-                  target)
-    df = read_target(spark, target)
+    I.merge_batch_versioned(
+        _events_df(spark, [_event(recs[0], "upsert", "2020-01-01T00:00:00Z")]), target)
+    df = VT.read(spark, target)
     assert df.count() == 1
     first = df.first()
     assert first["metadata"]["created"] == datetime.datetime(2020, 1, 1)
@@ -49,9 +45,9 @@ def test_merge_insert_then_update(spark, target):
 
     # update: created preserved, updated advances
     upd = dict(recs[0], study_number="revised")
-    I.merge_batch(_events_df(spark, [_event(upd, "upsert", "2020-02-01T00:00:00Z")]),
-                  target)
-    df = read_target(spark, target)
+    I.merge_batch_versioned(
+        _events_df(spark, [_event(upd, "upsert", "2020-02-01T00:00:00Z")]), target)
+    df = VT.read(spark, target)
     assert df.count() == 1
     row = df.first()
     assert row["study_number"] == "revised"
@@ -61,11 +57,11 @@ def test_merge_insert_then_update(spark, target):
 
 def test_merge_logical_delete_tombstone(spark, target):
     recs = fixture_records()
-    I.merge_batch(_events_df(spark, [_event(recs[0], "upsert", "2020-01-01T00:00:00Z")]),
-                  target)
-    I.merge_batch(_events_df(spark, [_event(recs[0], "delete", "2020-03-01T00:00:00Z")]),
-                  target)
-    df = read_target(spark, target)
+    I.merge_batch_versioned(
+        _events_df(spark, [_event(recs[0], "upsert", "2020-01-01T00:00:00Z")]), target)
+    I.merge_batch_versioned(
+        _events_df(spark, [_event(recs[0], "delete", "2020-03-01T00:00:00Z")]), target)
+    df = VT.read(spark, target)
     assert df.count() == 1  # row stays (logical delete)
     row = df.first()
     assert row["metadata"]["status"] == "deleted"
@@ -77,8 +73,8 @@ def test_merge_last_event_per_key_wins(spark, target):
     recs = fixture_records()
     a = _event(dict(recs[0], study_number="v1"), "upsert", "2020-01-01T00:00:00Z")
     b = _event(dict(recs[0], study_number="v2"), "upsert", "2020-01-02T00:00:00Z")
-    I.merge_batch(_events_df(spark, [b, a]), target)
-    df = read_target(spark, target)
+    I.merge_batch_versioned(_events_df(spark, [b, a]), target)
+    df = VT.read(spark, target)
     assert df.count() == 1 and df.first()["study_number"] == "v2"
 
 
@@ -92,9 +88,9 @@ def test_streaming_ingest_end_to_end(spark, tmp_path):
     # duplicate delivery of the same event must dedup within the watermark
     batch1.append(_event(recs[0], "upsert", "2020-01-01T00:00:00Z"))
     _events_df(spark, batch1).coalesce(1).write.mode("append").parquet(src)
-    q = I.start_ingest(spark, src, target, ckpt)
+    q = I.start_ingest_versioned(spark, src, target, ckpt)
     q.awaitTermination(120)
-    df = read_target(spark, target)
+    df = VT.read(spark, target)
     assert df.count() == 4
     assert df.filter(F.col("aggregator_identifier") == "agg_id_1").count() == 1
 
@@ -102,9 +98,9 @@ def test_streaming_ingest_end_to_end(spark, tmp_path):
     batch2 = [_event(recs[0], "delete", "2020-02-01T00:00:00Z"),
               _event(recs[4], "upsert", "2020-02-01T00:00:00Z")]
     _events_df(spark, batch2).coalesce(1).write.mode("append").parquet(src)
-    q = I.start_ingest(spark, src, target, ckpt)
+    q = I.start_ingest_versioned(spark, src, target, ckpt)
     q.awaitTermination(120)
-    df = read_target(spark, target)
+    df = VT.read(spark, target)
     assert df.count() == 5
     deleted = df.filter(F.col("aggregator_identifier") == "agg_id_1").first()
     assert deleted["metadata"]["status"] == "deleted"
@@ -182,7 +178,7 @@ def test_synthetic_harvest_source_end_to_end(spark, tmp_path):
     ckpt = str(tmp_path / "synth_ckpt")
     stream = S.synthetic_harvest_stream(spark, rows_per_batch=30)
     q = (stream.writeStream
-         .foreachBatch(lambda df, _e: I.merge_batch(df, target))
+         .foreachBatch(lambda df, _e: I.merge_batch_versioned(df, target))
          .option("checkpointLocation", ckpt)
          .outputMode("update")
          .trigger(processingTime="1 second")
@@ -197,7 +193,7 @@ def test_synthetic_harvest_source_end_to_end(spark, tmp_path):
     q.stop()
     q.awaitTermination(30)
 
-    df = spark.read.parquet(target)
+    df = VT.read(spark, target)
     rows = {r["aggregator_identifier"]: r for r in df.collect()}
     assert 0 < len(rows) <= S.REHARVEST_MOD  # bounded by the wrapping id space
     # value 9 → synth_2 deleted in the first batch wave

@@ -13,9 +13,10 @@ stdlib-only gate:
 3. AST sweep for module-level ``*_CACHE`` dicts in the package: every
    corpus or session memo lives in the one registry
    (``sources/tables.corpus_memo``), never in a hand-rolled cache dict,
-4. AST sweep of tools/ and bench.py for ``sys.path.insert``/``append`` of
-   an absolute string literal: a tool run from another checkout must
-   import the tree it sits in, so it resolves the root from ``__file__``,
+4. AST sweep of tools/, tests/ and bench.py for ``sys.path.insert``/
+   ``append`` of an absolute string literal: a tool or test session run
+   from another checkout must import the tree it sits in, so it resolves
+   the root from ``__file__``,
 5. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
    contract (the driver's smoke surface).
 
@@ -149,11 +150,11 @@ def literal_sys_path_problems(source: str, filename: str) -> list[str]:
     return errs
 
 
-def check_literal_sys_path(paths) -> list[str]:
+def check_literal_sys_path(paths, root: pathlib.Path = REPO) -> list[str]:
     errs = []
     for p in paths:
-        rel = p.relative_to(REPO).parts
-        if rel[0] == "tools" or rel == ("bench.py",):
+        rel = p.relative_to(root).parts
+        if rel[0] in ("tools", "tests") or rel == ("bench.py",):
             errs += literal_sys_path_problems(p.read_text(), str(p))
     return errs
 
