@@ -1,4 +1,4 @@
-"""The complete reference lifecycle in ONE test (round-4 verdict item 6):
+"""The complete reference lifecycle, over one shared two-sweep harvest:
 
     live OAI-PMH endpoint (3 resumption pages)
       → poller lands events
@@ -17,8 +17,12 @@ and OAI consumers)."""
 from __future__ import annotations
 
 import datetime
+import time
 import urllib.request
 import xml.etree.ElementTree as ET
+from types import SimpleNamespace
+
+import pytest
 
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.facade import OAIFacade
 from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.oai.server import OAIHTTPServer
@@ -70,15 +74,16 @@ def _sweep2_records() -> list[dict]:
     return list(recs.values())
 
 
-def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
-    """The harvest→merge→serve cycle over the versioned table, the one
-    corpus store. Each microbatch commits one snapshot, so O2 snapshot
-    paging, CDC and time travel hold over the LIVE studies corpus: after
-    the update+delete sweep, the pre-sweep version still serves the old
-    state."""
+@pytest.fixture(scope="module")
+def two_sweeps(spark, tmp_path_factory):
+    """Harvest the 8 fixtures, merge them into a versioned table, then
+    harvest a second sweep (one update, one delete) and merge it with the
+    same checkpoint. Both lifecycle tests read the result."""
+    tmp_path = tmp_path_factory.mktemp("lifecycle")
     events_dir = str(tmp_path / "events")
     table_path = str(tmp_path / "vt_corpus")
     ckpt = str(tmp_path / "ckpt")
+    view_path = str(tmp_path / "metrics_view.json")
 
     # sweep 1: harvest the 8 fixtures over 3 resumption pages, merge into
     # the versioned table
@@ -92,21 +97,15 @@ def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
         assert poller.poll_once(spark, events_dir, harvest_ts=T1) == 8
     finally:
         src.stop()
-    view_path = str(tmp_path / "metrics_view.json")
     start_ingest_versioned(spark, events_dir, table_path, ckpt,
                            metrics_view_path=view_path).awaitTermination()
     v1 = VT.current_version(table_path)
-    import time as _time
+    t_between_sweeps = time.time()
+    sweep1_rows = {r["aggregator_identifier"]: r
+                   for r in VT.read(spark, table_path).collect()}
 
-    t_between_sweeps = _time.time()
-    rows = {r["aggregator_identifier"]: r
-            for r in VT.read(spark, table_path).collect()}
-    assert len(rows) == 8
-    assert {t["value"] for t in rows["agg_id_3"]["study_titles"]} == \
-        {"Title of agg_id_3", "Otsikko agg_id_3"}
-    assert rows["agg_id_1"]["metadata"]["status"] == "created"
-
-    # sweep 2: update + delete, incremental merge (same checkpoint)
+    # sweep 2: update + delete, incremental merge (same checkpoint, so the
+    # file source processes only sweep 2's files)
     src2_df = spark.createDataFrame(_sweep2_records(), schema=studies_schema())
     src2 = OAIHTTPServer(
         OAIFacade(OAIQueryPlanner(src2_df, page_size=3)), port=0).start()
@@ -118,9 +117,24 @@ def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
         src2.stop()
     start_ingest_versioned(spark, events_dir, table_path, ckpt,
                            metrics_view_path=view_path).awaitTermination()
-
     v2 = VT.current_version(table_path)
-    corpus = VT.read(spark, table_path, version=v2)
+    return SimpleNamespace(
+        table_path=table_path, view_path=view_path, v1=v1, v2=v2,
+        t_between_sweeps=t_between_sweeps, sweep1_rows=sweep1_rows,
+        corpus=VT.read(spark, table_path, version=v2))
+
+
+def test_full_lifecycle_harvest_update_delete_serve(spark, two_sweeps):
+    """harvest → merge → update+delete sweep → incremental merge → the
+    merged head serves ListRecords pages, header-only deletes, the updated
+    oai_ddi25 field and moving /metrics over HTTP."""
+    rows = two_sweeps.sweep1_rows
+    assert len(rows) == 8
+    assert {t["value"] for t in rows["agg_id_3"]["study_titles"]} == \
+        {"Title of agg_id_3", "Otsikko agg_id_3"}
+    assert rows["agg_id_1"]["metadata"]["status"] == "created"
+
+    corpus = two_sweeps.corpus
     rows = {r["aggregator_identifier"]: r for r in corpus.collect()}
     assert len(rows) == 8  # update + delete, no duplicates
     assert [t["value"] for t in rows["agg_id_3"]["study_titles"]] == \
@@ -129,33 +143,10 @@ def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
     assert rows["agg_id_1"]["metadata"]["deleted"] == T2
     assert rows["agg_id_2"]["metadata"]["status"] == "deleted"  # from sweep 1
 
-    # TIME TRAVEL across the ingest batch (SURVEY §2.5 O2, the Delta
-    # "VERSION AS OF" idiom): the pre-sweep-2 snapshot is intact
-    old = {r["aggregator_identifier"]: r
-           for r in VT.read(spark, table_path, version=v1).collect()}
-    assert len(old) == 8
-    assert {t["value"] for t in old["agg_id_3"]["study_titles"]} == \
-        {"Title of agg_id_3", "Otsikko agg_id_3"}
-    assert old["agg_id_1"]["metadata"]["status"] == "created"
-
-    # CDC between the two snapshots: sweep 2 re-upserted every record
-    # (metadata.updated moved to T2 on all 8), so the feed carries a
-    # delete+insert pair per key; the inserts show the new state
-    feed = VT.table_changes(spark, table_path, v1,
-                            VT.current_version(table_path)).collect()
-    inserts = {r["aggregator_identifier"]: r for r in feed
-               if r["_change"] == "insert"}
-    deletes = {r["aggregator_identifier"] for r in feed
-               if r["_change"] == "delete"}
-    assert set(inserts) == deletes == {f"agg_id_{i}" for i in range(1, 9)}
-    assert [t["value"] for t in inserts["agg_id_3"]["study_titles"]] == \
-        ["Updated title 3"]
-    assert inserts["agg_id_1"]["metadata"]["status"] == "deleted"
-
     # the merged head serves over HTTP
     srv = OAIHTTPServer(OAIFacade(OAIQueryPlanner(
-        corpus, page_size=3, vt_path=table_path, vt_version=v2)),
-        port=0).start()
+        corpus, page_size=3, vt_path=two_sweeps.table_path,
+        vt_version=two_sweeps.v2)), port=0).start()
     try:
         # metrics BEFORE: corpus totals; requests counter baseline
         _, m0 = _http(srv.port, "/metrics")
@@ -212,6 +203,43 @@ def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
     finally:
         srv.stop()
 
+
+def test_lifecycle_on_versioned_table_with_time_travel(spark, two_sweeps):
+    """Each microbatch commits one snapshot of the versioned table, so O2
+    snapshot paging, CDC and time travel hold over the LIVE studies corpus:
+    after the update+delete sweep, the pre-sweep version still serves the
+    old state."""
+    table_path, v1 = two_sweeps.table_path, two_sweeps.v1
+    corpus = two_sweeps.corpus
+    rows = {r["aggregator_identifier"]: r for r in corpus.collect()}
+    assert len(rows) == 8
+    assert [t["value"] for t in rows["agg_id_3"]["study_titles"]] == \
+        ["Updated title 3"]
+    assert rows["agg_id_1"]["metadata"]["status"] == "deleted"
+
+    # TIME TRAVEL across the ingest batch (SURVEY §2.5 O2, the Delta
+    # "VERSION AS OF" idiom): the pre-sweep-2 snapshot is intact
+    old = {r["aggregator_identifier"]: r
+           for r in VT.read(spark, table_path, version=v1).collect()}
+    assert len(old) == 8
+    assert {t["value"] for t in old["agg_id_3"]["study_titles"]} == \
+        {"Title of agg_id_3", "Otsikko agg_id_3"}
+    assert old["agg_id_1"]["metadata"]["status"] == "created"
+
+    # CDC between the two snapshots: sweep 2 re-upserted every record
+    # (metadata.updated moved to T2 on all 8), so the feed carries a
+    # delete+insert pair per key; the inserts show the new state
+    feed = VT.table_changes(spark, table_path, v1,
+                            VT.current_version(table_path)).collect()
+    inserts = {r["aggregator_identifier"]: r for r in feed
+               if r["_change"] == "insert"}
+    deletes = {r["aggregator_identifier"] for r in feed
+               if r["_change"] == "delete"}
+    assert set(inserts) == deletes == {f"agg_id_{i}" for i in range(1, 9)}
+    assert [t["value"] for t in inserts["agg_id_3"]["study_titles"]] == \
+        ["Updated title 3"]
+    assert inserts["agg_id_1"]["metadata"]["status"] == "deleted"
+
     # replayed epoch is a no-op (epoch rides the manifest, not a marker)
     v_before = VT.current_version(table_path)
     merge_batch_versioned(
@@ -221,8 +249,8 @@ def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
 
     # TIMESTAMP AS OF: a wall-clock taken between the sweeps resolves to
     # the sweep-1 snapshot (manifests record committed_at at publish)
-    assert VT.version_asof(table_path, t_between_sweeps) == v1
-    assert VT.version_asof(table_path, _time.time()) == v_before
+    assert VT.version_asof(table_path, two_sweeps.t_between_sweeps) == v1
+    assert VT.version_asof(table_path, time.time()) == v_before
 
     # the maintained /metrics view advanced with each microbatch and must
     # equal a from-scratch recompute over the corpus — including the
@@ -233,7 +261,7 @@ def test_lifecycle_on_versioned_table_with_time_travel(spark, tmp_path):
     from cessda_cdc_aggregator_oai_pmh_repo_handler_spark.streaming.ingest import (
         _load_view_state, metrics_view_counts,
     )
-    view = metrics_view_counts(_load_view_state(view_path))
+    view = metrics_view_counts(_load_view_state(two_sweeps.view_path))
     direct = compute_metrics(corpus)
     assert view["version"] == v_before
     assert view["publishers_counts"] == direct["publishers_counts"]
