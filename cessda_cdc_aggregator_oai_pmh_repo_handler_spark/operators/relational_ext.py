@@ -477,7 +477,7 @@ def q_versioned_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         VT.append(n.filter(F.col("n_nationkey") >= 10).coalesce(1), path)
         upd = spark.createDataFrame([(3, "RENAMED")],
                                     "n_nationkey INT, n_name STRING")
-        VT.merge(spark, upd.select(
+        VT.merge_keys(spark, upd.select(
             F.col("n_nationkey").cast(dict(n.dtypes)["n_nationkey"]),
             "n_name"), path, key="n_nationkey")
         # time-travel counts come from MANIFEST footer stats: zero jobs

@@ -65,10 +65,21 @@ def read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
+def _snapshot(path: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, manifest) of a retained snapshot; the head by default."""
+    v = current_version(path) if version is None else version
+    return v, read_manifest(path, v)
+
+
 def versions(path: str) -> list[int]:
     mdir = os.path.join(path, "_manifests")
     return sorted(int(n[1:-5]) for n in os.listdir(mdir)
                   if n.startswith("v") and n.endswith(".json"))
+
+
+def _all_files(m: dict) -> list[str]:
+    """Every file a manifest references: data files, then delete files."""
+    return m["files"] + m.get("delete_vectors", {}).get("files", [])
 
 
 def _stage(df: DataFrame, path: str, version: int) -> list[str]:
@@ -127,10 +138,9 @@ def verify_integrity(path: str, version: int | None = None,
     100 TB mode); without it the driver reads each file itself. A corrupt
     file is recoverable from the parent snapshot as long as vacuum
     hasn't run."""
-    v = current_version(path) if version is None else version
-    m = read_manifest(path, v)
+    _, m = _snapshot(path, version)
     recorded = m.get("checksums", {})
-    targets = m["files"] + m.get("delete_vectors", {}).get("files", [])
+    targets = _all_files(m)
     checkable = [f for f in targets if f in recorded]
     actual = (_checksums_distributed(spark, checkable) if spark is not None
               else _checksums(checkable))
@@ -245,6 +255,31 @@ def _read_files(spark: SparkSession, m: dict, files: list[str]):
     return spark.read.parquet(*files)
 
 
+def _scan(spark: SparkSession, m: dict, files: list[str]) -> DataFrame:
+    """THE snapshot scan: ``files`` of manifest ``m`` under the declared
+    schema, minus the snapshot's MERGE-ON-READ deletes (a broadcast
+    anti-join on the delete-vector key). No files gives the snapshot's
+    empty relation."""
+    from pyspark.sql import functions as F
+
+    if not files:
+        return _read_files(spark, m, m["files"]).filter(F.lit(False))
+    df = _read_files(spark, m, files)
+    dv = m.get("delete_vectors")
+    if dv:
+        dead = spark.read.parquet(*dv["files"]).select(
+            F.col("k").alias(dv["key"])).distinct()
+        df = df.join(F.broadcast(dead), on=dv["key"], how="left_anti")
+    return df
+
+
+def _zone_overlaps(m: dict, f: str, column: str, lo, hi) -> bool:
+    """False iff file ``f``'s zone map on ``column`` proves no row lies in
+    [lo, hi]; a file without stats overlaps (safe side)."""
+    zone = m.get("stats", {}).get(f, {}).get(column)
+    return zone is None or (zone[1] >= lo and zone[0] <= hi)
+
+
 def read_point(spark: SparkSession, path: str, column: str, value,
                version: int | None = None) -> tuple[DataFrame, int, int]:
     """Point lookup through the manifest blooms: skip every file whose
@@ -257,11 +292,11 @@ def read_point(spark: SparkSession, path: str, column: str, value,
     which would silently bloom-skip a present key (ADVICE r5). ints and
     strings take the fast path (the renderings provably coincide)."""
     import base64
+    import zlib
 
     from pyspark.sql import functions as F
 
-    v = current_version(path) if version is None else version
-    m = read_manifest(path, v)
+    _, m = _snapshot(path, version)
     blooms = m.get("blooms", {}).get(column, {})
     if isinstance(value, str) or (isinstance(value, int)
                                   and not isinstance(value, bool)):
@@ -269,36 +304,18 @@ def read_point(spark: SparkSession, path: str, column: str, value,
     else:
         probe = spark.range(1).select(
             F.lit(value).cast("string").alias("v")).first()["v"]
-    keep = []
-    for f in m["files"]:
-        b64 = blooms.get(f)
-        if b64 is None:
-            keep.append(f)
-            continue
-        bits = base64.b64decode(b64)
-        import zlib
+    positions = [zlib.crc32(f"{k}|{probe}".encode()) % BLOOM_BITS
+                 for k in range(BLOOM_HASHES)]
 
-        hits = all(
-            bits[(zlib.crc32(f"{k}|{probe}".encode()) % BLOOM_BITS) // 8]
-            >> ((zlib.crc32(f"{k}|{probe}".encode()) % BLOOM_BITS) % 8) & 1
-            for k in range(BLOOM_HASHES))
-        if hits:
-            keep.append(f)
-    pred = F.col(column).cast("string") == probe
+    def maybe_holds(f: str) -> bool:
+        if f not in blooms:
+            return True
+        bits = base64.b64decode(blooms[f])
+        return all(bits[p // 8] >> (p % 8) & 1 for p in positions)
 
-    def _with_deletes(df: DataFrame) -> DataFrame:
-        dv = m.get("delete_vectors")
-        if dv:  # same merge-on-read semantics as read()
-            dead = spark.read.parquet(*dv["files"]).select(
-                F.col("k").alias(dv["key"])).distinct()
-            df = df.join(F.broadcast(dead), on=dv["key"], how="left_anti")
-        return df
-
-    if not keep:
-        return (_read_files(spark, m, m["files"]).filter(F.lit(False)),
-                len(m["files"]), 0)
-    return (_with_deletes(_read_files(spark, m, keep).filter(pred)),
-            len(m["files"]), len(keep))
+    keep = [f for f in m["files"] if maybe_holds(f)]
+    df = _scan(spark, m, keep).filter(F.col(column).cast("string") == probe)
+    return df, len(m["files"]), len(keep)
 
 
 def _publish(path: str, manifest: dict, expected_parent: int) -> int:
@@ -313,15 +330,21 @@ def _publish(path: str, manifest: dict, expected_parent: int) -> int:
     won any photo-finish race (the loser raises ConcurrentWriteError and
     its staged files wait for vacuum)."""
     version = manifest["version"]
+    listed = _all_files(manifest)
     os.makedirs(os.path.join(path, "_manifests"), exist_ok=True)
     if os.path.exists(_pointer_path(path)):
         now = current_version(path)
-        if now != expected_parent:
+        # refused: another writer moved the pointer, or it already covers
+        # this version (genuinely committed)
+        if now != expected_parent or (now >= version and version != 0):
+            # the loser's staged files wait for vacuum; their checksums
+            # must not wait in the driver
+            for f in listed:
+                _STAGED_CHECKSUMS.pop(f, None)
             raise ConcurrentWriteError(
-                f"expected version {expected_parent}, table is at {now}")
-        if now >= version and version != 0:
-            # the pointer already covers this version: genuinely committed
-            raise ConcurrentWriteError(f"version {version} already committed")
+                f"expected version {expected_parent}, table is at {now}"
+                if now != expected_parent
+                else f"version {version} already committed")
     # integrity: checksum every newly staged file once (parent entries
     # carry over so a commit's cost stays proportional to what it wrote).
     # Staged files were checksummed in-cluster at write time (_stage);
@@ -330,8 +353,6 @@ def _publish(path: str, manifest: dict, expected_parent: int) -> int:
     parent = manifest.get("parent")
     pm = read_manifest(path, parent) if parent is not None else {}
     prior = pm.get("checksums", {})
-    listed = manifest["files"] + manifest.get("delete_vectors",
-                                              {}).get("files", [])
     manifest["checksums"] = {
         **{f: c for f, c in prior.items() if f in listed},
         **{f: _STAGED_CHECKSUMS.pop(f)
@@ -345,6 +366,16 @@ def _publish(path: str, manifest: dict, expected_parent: int) -> int:
     inherited = pm.get("recent_epochs", [])
     own = [manifest["epoch"]] if "epoch" in manifest else []
     manifest["recent_epochs"] = (inherited + own)[-EPOCH_MEMORY:]
+    # a file's zone map and bloom stay valid while the file exists: keep
+    # the parent's entries for every data file still listed, so an op
+    # passes only its new files' stats
+    data = set(manifest["files"])
+    manifest["stats"] = {
+        **{f: z for f, z in pm.get("stats", {}).items() if f in data},
+        **manifest.get("stats", {})}
+    manifest["blooms"] = {
+        c: kept for c, per_file in pm.get("blooms", {}).items()
+        if (kept := {f: b for f, b in per_file.items() if f in data})}
     # schema tracking rides every manifest: ops that don't change it
     # (append/merge/compact/delete) inherit the parent's declaration, so
     # readers always find the snapshot's schema in ONE manifest read
@@ -403,8 +434,7 @@ def table_schema(path: str, version: int | None = None):
     created before schema tracking."""
     from pyspark.sql.types import StructType
 
-    v = current_version(path) if version is None else version
-    raw = read_manifest(path, v).get("schema")
+    raw = _snapshot(path, version)[1].get("schema")
     return StructType.fromJson(json.loads(raw)) if raw else None
 
 
@@ -462,18 +492,22 @@ def _check_append_schema(df: DataFrame, prev: dict) -> None:
 
 
 def append(df: DataFrame, path: str,
-           expected_version: int | None = None) -> int:
-    parent = current_version(path) if expected_version is None \
-        else expected_version
+           expected_version: int | None = None,
+           epoch: int | None = None) -> int | None:
+    """Append ``df``'s rows as new files. ``epoch`` rides the manifest,
+    so an at-least-once redelivery (foreachBatch replay) of a committed
+    epoch is a no-op returning None — streaming exactly-once ON TOP of
+    the snapshot table, with no side channel."""
+    if epoch is not None and epoch_committed(path, epoch):
+        return None
+    parent, prev = _snapshot(path, expected_version)
     version = parent + 1
-    prev = read_manifest(path, parent)
     _check_append_schema(df, prev)
     files = _stage(df, path, version)
     return _publish(path, {"version": version, "parent": parent,
                            "op": "append", "files": prev["files"] + files,
-                           "stats": {**prev.get("stats", {}),
-                                     **_file_stats(files)},
-                           "blooms": prev.get("blooms", {}),
+                           "stats": _file_stats(files),
+                           **({"epoch": epoch} if epoch is not None else {}),
                            **({"delete_vectors": prev["delete_vectors"]}
                               if prev.get("delete_vectors") else {})},
                     expected_parent=parent)
@@ -492,10 +526,8 @@ def append_evolve(df: DataFrame, path: str,
     before the drop still carry the old values under that name and a
     re-add would resurrect them (the documented limitation field IDs
     exist to solve)."""
-    parent = current_version(path) if expected_version is None \
-        else expected_version
+    parent, prev = _snapshot(path, expected_version)
     version = parent + 1
-    prev = read_manifest(path, parent)
     if not prev.get("schema"):
         # a legacy (pre-schema-tracking) table: evolving against an
         # UNKNOWN declaration would silently narrow reads to this batch's
@@ -528,9 +560,7 @@ def append_evolve(df: DataFrame, path: str,
     return _publish(path, {"version": version, "parent": parent,
                            "op": "append_evolve",
                            "files": prev["files"] + files,
-                           "stats": {**prev.get("stats", {}),
-                                     **_file_stats(files)},
-                           "blooms": prev.get("blooms", {}),
+                           "stats": _file_stats(files),
                            "schema": evolved.json(),
                            **({"delete_vectors": prev["delete_vectors"]}
                               if prev.get("delete_vectors") else {})},
@@ -548,9 +578,7 @@ def drop_column(path: str, column: str,
     at 100 KB."""
     import pyspark.sql.types as T
 
-    parent = current_version(path) if expected_version is None \
-        else expected_version
-    prev = read_manifest(path, parent)
+    parent, prev = _snapshot(path, expected_version)
     if not prev.get("schema"):
         raise SchemaEvolutionError("table has no schema declaration")
     base = T.StructType.fromJson(json.loads(prev["schema"]))
@@ -560,9 +588,7 @@ def drop_column(path: str, column: str,
     return _publish(
         path,
         {"version": parent + 1, "parent": parent, "op": "drop_column",
-         "files": prev["files"], "stats": prev.get("stats", {}),
-         "blooms": prev.get("blooms", {}),
-         "schema": evolved.json(),
+         "files": prev["files"], "schema": evolved.json(),
          "dropped_columns": sorted(
              set(prev.get("dropped_columns", [])) | {column}),
          **({"delete_vectors": prev["delete_vectors"]}
@@ -594,8 +620,7 @@ def count_rows(path: str, version: int | None = None) -> int | None:
     parquet-footer num_rows). None if any file lacks stats or the
     snapshot has merge-on-read deletes pending (those subtract at read
     time, so only a data read can count them)."""
-    v = current_version(path) if version is None else version
-    m = read_manifest(path, v)
+    _, m = _snapshot(path, version)
     if m.get("delete_vectors"):
         return None
     stats = m.get("stats", {})
@@ -613,17 +638,8 @@ def read(spark: SparkSession, path: str,
     """Snapshot read: exactly the manifest's files, any retained version;
     MERGE-ON-READ deletes (delete_keys) apply as a broadcast anti-join
     against the snapshot's delete files."""
-    from pyspark.sql import functions as F
-
-    v = current_version(path) if version is None else version
-    m = read_manifest(path, v)
-    df = _read_files(spark, m, m["files"])
-    dv = m.get("delete_vectors")
-    if dv:
-        dead = spark.read.parquet(*dv["files"]).select(
-            F.col("k").alias(dv["key"])).distinct()
-        df = df.join(F.broadcast(dead), on=dv["key"], how="left_anti")
-    return df
+    _, m = _snapshot(path, version)
+    return _scan(spark, m, m["files"])
 
 
 def delete_keys(spark: SparkSession, path: str, key_col: str,
@@ -635,8 +651,7 @@ def delete_keys(spark: SparkSession, path: str, key_col: str,
     (rewrites survivors) and clears the vectors — the write-amplification
     trade made explicit. One key column per table (the common case);
     time travel before this version still shows the rows."""
-    head = current_version(path)
-    prev = read_manifest(path, head)
+    head, prev = _snapshot(path)
     pdv = prev.get("delete_vectors")
     if pdv and pdv["key"] != key_col:
         raise ValueError(f"existing delete vectors use key {pdv['key']}")
@@ -647,63 +662,21 @@ def delete_keys(spark: SparkSession, path: str, key_col: str,
                     path, version)
     return _publish(path, {
         "version": version, "parent": head, "op": "delete",
-        "files": prev["files"], "stats": prev.get("stats", {}),
-        "blooms": prev.get("blooms", {}),
+        "files": prev["files"],
         "delete_vectors": {"key": key_col,
                            "files": (pdv["files"] if pdv else []) + dfiles},
     }, expected_parent=head)
 
 
-def append_batch_exactly_once(batch: DataFrame, path: str,
-                              epoch: int) -> int | None:
-    """foreachBatch-shaped append: the microbatch epoch rides the
-    manifest, so an at-least-once redelivery finds its epoch already
-    committed in the manifest chain and becomes a no-op — streaming
-    exactly-once ON TOP of the snapshot table, with no side channel.
-    Returns the published version, or None for a skipped replay.
-
-    Replay detection reads ONLY the head manifest's bounded
-    ``recent_epochs`` set (O(1) per batch; vacuum-safe — no parent-chain
-    walk). Manifests from before that field existed fall back to the
-    chain walk, stopping gracefully at a vacuumed (missing) parent."""
-    head = current_version(path)
-    m = read_manifest(path, head)
-    if "recent_epochs" in m:
-        if epoch in m["recent_epochs"]:
-            return None  # replayed epoch: already committed
-    else:  # pre-upgrade manifest: legacy walk, tolerant of vacuumed links
-        while True:
-            if m.get("epoch") == epoch:
-                return None
-            if m.get("parent") is None:
-                break
-            try:
-                m = read_manifest(path, m["parent"])
-            except FileNotFoundError:
-                break  # vacuumed past here: older epochs are done epochs
-    version = head + 1
-    files = _stage(batch, path, version)
-    prev = read_manifest(path, head)
-    return _publish(path, {"version": version, "parent": head,
-                           "op": "append", "epoch": epoch,
-                           "files": prev["files"] + files,
-                           "stats": {**prev.get("stats", {}),
-                                     **_file_stats(files)},
-                           "blooms": prev.get("blooms", {}),
-                           **({"delete_vectors": prev["delete_vectors"]}
-                              if prev.get("delete_vectors") else {})},
-                    expected_parent=head)
-
-
 def start_append_stream(spark: SparkSession, source_dir: str, schema,
                         path: str, checkpoint: str):
     """Continuously append a parquet-landing stream to the versioned
-    table, one snapshot per microbatch."""
+    table, one snapshot per microbatch, exactly-once through ``append``'s
+    epoch."""
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(source_dir))
     return (stream.writeStream
-            .foreachBatch(lambda b, eid: append_batch_exactly_once(
-                b, path, int(eid)))
+            .foreachBatch(lambda b, eid: append(b, path, epoch=int(eid)))
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())
@@ -721,52 +694,29 @@ def read_pruned(spark: SparkSession, path: str, column: str,
     of footers instead of the table."""
     from pyspark.sql import functions as F
 
-    v = current_version(path) if version is None else version
-    m = read_manifest(path, v)
-    stats = m.get("stats", {})
-    keep = []
-    for f in m["files"]:
-        zone = stats.get(f, {}).get(column)
-        if zone is None or (zone[1] >= lo and zone[0] <= hi):
-            keep.append(f)  # keep on overlap OR missing stats (safe side)
-    pred = F.col(column).between(lo, hi)
-    if not keep:
-        return (_read_files(spark, m, m["files"]).filter(F.lit(False)),
-                len(m["files"]), 0)
-    df = _read_files(spark, m, keep).filter(pred)
-    dv = m.get("delete_vectors")
-    if dv:  # same merge-on-read semantics as read()
-        dead = spark.read.parquet(*dv["files"]).select(
-            F.col("k").alias(dv["key"])).distinct()
-        df = df.join(F.broadcast(dead), on=dv["key"], how="left_anti")
+    _, m = _snapshot(path, version)
+    keep = [f for f in m["files"] if _zone_overlaps(m, f, column, lo, hi)]
+    df = _scan(spark, m, keep).filter(F.col(column).between(lo, hi))
     return df, len(m["files"]), len(keep)
-
-
-def merge(spark: SparkSession, updates: DataFrame, path: str, key: str,
-          max_retries: int = 3) -> int:
-    """Transactional UPSERT: read the head snapshot, keep every current
-    row whose key is not updated (left anti), union the updates, publish
-    as an overwrite AGAINST THE SNAPSHOT VERSION — a lost race re-reads
-    and retries, so concurrent mergers serialize instead of clobbering."""
-    last: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
-        head = current_version(path)
-        cur = read(spark, path, head)
-        merged = (cur.join(updates.select(key).distinct(), on=key,
-                           how="left_anti")
-                  .unionByName(updates))
-        try:
-            return overwrite(merged, path, expected_version=head)
-        except ConcurrentWriteError as e:
-            last = e
-    raise last
 
 
 def epoch_committed(path: str, epoch: int) -> bool:
     """True iff ``epoch`` is in the head manifest's bounded recent-epoch
-    set — the O(1) exactly-once replay probe (no chain walk)."""
+    set — the O(1) exactly-once replay probe (vacuum-safe: no
+    parent-chain walk). Manifests from before that field existed fall
+    back to the chain walk, stopping gracefully at a vacuumed (missing)
+    parent."""
     m = read_manifest(path, current_version(path))
-    return epoch in m.get("recent_epochs", []) or m.get("epoch") == epoch
+    if "recent_epochs" in m:
+        return epoch in m["recent_epochs"]
+    while m.get("epoch") != epoch:  # pre-upgrade manifest: legacy walk
+        if m.get("parent") is None:
+            return False
+        try:
+            m = read_manifest(path, m["parent"])
+        except FileNotFoundError:
+            return False  # vacuumed past here: older epochs are done epochs
+    return True
 
 
 def merge_keys(spark: SparkSession, updates: DataFrame, path: str,
@@ -778,61 +728,46 @@ def merge_keys(spark: SparkSession, updates: DataFrame, path: str,
     file carries over by reference. Candidate files are chosen from the
     manifest zone maps on ``key`` against the batch's key range — after a
     key-clustered ``compact``, a batch touches ~the files its key range
-    covers, so merge I/O is batch-sized against a corpus-sized table
-    (``merge``, by contrast, rewrites the whole snapshot every time).
+    covers, so merge I/O is batch-sized against a corpus-sized table.
 
-    Pending merge-on-read delete vectors are materialized into the
-    rewritten files and carried for the untouched ones. ``epoch`` rides
+    Pending merge-on-read delete vectors are materialized: a merge over
+    them rewrites every file through the snapshot scan, which applies
+    them, and the new manifest clears them. ``epoch`` rides
     the manifest for exactly-once under foreachBatch replays (returns
     None for a skipped replay). Lost optimistic races retry."""
     from pyspark.sql import functions as F
 
     last: ConcurrentWriteError | None = None
     for _ in range(max_retries):
-        head = current_version(path)
         if epoch is not None and epoch_committed(path, epoch):
             return None
-        m = read_manifest(path, head)
+        head, m = _snapshot(path)
         # fail loudly on schema drift instead of a deep unionByName error;
         # evolution goes through append_evolve, never a merge side door
         _check_append_schema(updates, m)
-        stats = m.get("stats", {})
         bounds = updates.agg(
             F.min(F.col(key)).alias("lo"),
             F.max(F.col(key)).alias("hi")).first()
         lo, hi = bounds["lo"], bounds["hi"]
-        touched, untouched = [], []
-        for f in m["files"]:
-            zone = stats.get(f, {}).get(key)
-            if lo is None or zone is None or (zone[1] >= lo
-                                              and zone[0] <= hi):
-                touched.append(f)  # overlap or no stats: must rewrite
-            else:
-                untouched.append(f)
-        if m.get("delete_vectors"):
-            # pending deletes apply globally on read — a carried vector
-            # would also hit re-upserted keys in the new files, so a merge
-            # over pending deletes materializes them everywhere
-            touched, untouched = list(m["files"]), []
-        keys_df = updates.select(key).distinct()
+        # overlap or no stats: must rewrite. Pending deletes apply
+        # globally on read — a carried vector would also hit re-upserted
+        # keys in the new files — so they force a rewrite of every file
+        touched = [f for f in m["files"]
+                   if lo is None or m.get("delete_vectors")
+                   or _zone_overlaps(m, f, key, lo, hi)]
+        hit = set(touched)
+        untouched = [f for f in m["files"] if f not in hit]
+        out = updates
         if touched:
-            cur = _read_files(spark, m, touched)
-            dv = m.get("delete_vectors")
-            if dv:  # materialize pending deletes into the rewrite
-                dead = spark.read.parquet(*dv["files"]).select(
-                    F.col("k").alias(key)).distinct()
-                cur = cur.join(F.broadcast(dead), on=key, how="left_anti")
-            survivors = cur.join(keys_df, on=key, how="left_anti")
-            out = survivors.unionByName(updates)
-        else:
-            out = updates
+            out = _scan(spark, m, touched).join(
+                updates.select(key).distinct(), on=key,
+                how="left_anti").unionByName(updates)
         version = head + 1
         new_files = _stage(out, path, version)
         manifest = {
             "version": version, "parent": head, "op": "merge",
             "files": untouched + new_files,
-            "stats": {**{f: s for f, s in stats.items() if f in untouched},
-                      **_file_stats(new_files)},
+            "stats": _file_stats(new_files),
             **({"epoch": epoch} if epoch is not None else {}),
         }
         try:
@@ -1066,8 +1001,7 @@ def files_table(spark: SparkSession, path: str,
     in a snapshot, with size, recorded checksum, and the zone-map
     min/max per column (JSON) the pruners read. Manifest-only, no data
     scan."""
-    v = current_version(path) if version is None else version
-    m = read_manifest(path, v)
+    _, m = _snapshot(path, version)
     stats, sums = m.get("stats", {}), m.get("checksums", {})
     rows = []
     for f in m["files"]:
@@ -1081,17 +1015,14 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
     """Drop manifests (and their now-unreferenced data files) older than
     the last ``keep_last`` versions. Tagged versions are always retained
     (and their files stay live). Returns the deleted file paths."""
-    def all_files(m: dict) -> list[str]:
-        return m["files"] + m.get("delete_vectors", {}).get("files", [])
-
     vs = versions(path)
     tagged = set(_read_refs(path).values())
     keep = sorted(set(vs[-keep_last:]) | (tagged & set(vs)))
     drop = [v for v in vs if v not in keep]
-    live = {f for v in keep for f in all_files(read_manifest(path, v))}
+    live = {f for v in keep for f in _all_files(read_manifest(path, v))}
     dead: list[str] = []
     for v in drop:
-        for f in all_files(read_manifest(path, v)):
+        for f in _all_files(read_manifest(path, v)):
             if f not in live and os.path.exists(f):
                 os.remove(f)
                 dead.append(f)

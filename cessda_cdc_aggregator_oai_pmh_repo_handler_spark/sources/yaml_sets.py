@@ -9,8 +9,9 @@ from the reference:
   (/root/reference/cdcagg_oai/metadataformats.py:335-348).
 - **Configurable set**: one top-level ``{spec, name, description?, nodes}``
   where a node is either an inline ``{spec, name, description?,
-  identifiers:[...]}`` or ``{path: /abs/ext.yaml}`` pointing at one external
-  node or a list of nodes (externals cannot nest further). Syntax is
+  identifiers:[...]}`` or ``{path: ext.yaml}`` pointing at one external
+  node or a list of nodes (externals cannot nest further; a relative path
+  resolves against the directory of the defining file). Syntax is
   validated at configure; the file is RE-READ on every request by design
   (/root/reference/cdcagg_oai/metadataformats.py:103-151, 172-232).
 
@@ -20,6 +21,8 @@ studies side never shuffles for them.
 """
 
 from __future__ import annotations
+
+import os
 
 from yaml import safe_load
 
@@ -66,10 +69,14 @@ def _load_yaml(path: str):
 
 def _iter_nodes(cnf: dict, cnf_path: str):
     """Yield (node, defining_path), resolving one level of external files
-    (/root/reference/cdcagg_oai/metadataformats.py:179-189)."""
+    (/root/reference/cdcagg_oai/metadataformats.py:179-189). A relative
+    ``path:`` names a file beside ``cnf_path``, not one in the working
+    directory."""
     for node_or_path in cnf["nodes"]:
         if isinstance(node_or_path, dict) and "path" in node_or_path:
-            ext_path = node_or_path["path"]
+            # an absolute path is kept as is by os.path.join
+            ext_path = os.path.join(os.path.dirname(cnf_path),
+                                    node_or_path["path"])
             ext = _load_yaml(ext_path)
             for node in [ext] if isinstance(ext, dict) else ext:
                 yield node, ext_path

@@ -1,13 +1,14 @@
 """The commit gate's AST checks: every corpus or session memo lives in the
 one registry (sources/tables.corpus_memo), never in a module-level
-``*_CACHE`` dict; and no tool or test puts a literal absolute path on
-sys.path."""
+``*_CACHE`` dict; no tool or test puts a literal absolute path on
+sys.path; and no test data file names another by an absolute path."""
 
 from __future__ import annotations
 
 from tools.commit_gate import (
-    check_literal_sys_path, check_memo_dicts, iter_sources,
-    literal_sys_path_problems, memo_dict_problems,
+    absolute_yaml_paths, check_data_paths, check_literal_sys_path,
+    check_memo_dicts, iter_sources, literal_sys_path_problems,
+    memo_dict_problems,
 )
 
 
@@ -43,3 +44,17 @@ def test_literal_sys_path_in_a_test_file_is_flagged(tmp_path):
     paths = [tmp_path / "tests" / "test_x.py", tmp_path / "docs" / "test_x.py"]
     problems = check_literal_sys_path(paths, root=tmp_path)
     assert len(problems) == 1 and "tests" in problems[0]
+
+
+def test_test_data_has_no_absolute_paths():
+    assert check_data_paths() == []
+
+
+def test_absolute_path_in_test_data_is_flagged(tmp_path):
+    (tmp_path / "tests" / "data").mkdir(parents=True)
+    (tmp_path / "tests" / "data" / "sets.yaml").write_text(
+        "spec: s\nnodes:\n  - path: '/srv/checkout/tests/data/ext.yaml'\n"
+        "  - path: 'ext.yaml'\n  - url: 'http://example.org/oai'\n")
+    problems = check_data_paths(root=tmp_path)
+    assert len(problems) == 1 and "/srv/checkout" in problems[0]
+    assert absolute_yaml_paths("- spec: a\n", "x.yaml") == []

@@ -89,6 +89,24 @@ def test_validate_configurable_bad_external(tmp_path):
     main.write_text(f"spec: s\nname: n\nnodes:\n  - path: '{ext}'\n")
     with pytest.raises(yaml_sets.SetConfigError):
         yaml_sets.validate_configurable(str(main))
+    # a relative path names the file beside main.yaml, not one in the cwd
+    main.write_text("spec: s\nname: n\nnodes:\n  - path: 'ext.yaml'\n")
+    with pytest.raises(yaml_sets.SetConfigError):
+        yaml_sets.validate_configurable(str(main))
+
+
+def test_configurable_relative_path_resolves_beside_its_file(
+        tmp_path, monkeypatch):
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "sub" / "ext.yaml").write_text(
+        "- spec: c\n  name: cn\n  identifiers: [agg_id_9]\n")
+    main = tmp_path / "main.yaml"
+    main.write_text("spec: s\nname: n\nnodes:\n  - path: 'sub/ext.yaml'\n")
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    monkeypatch.chdir(elsewhere)
+    cnf = yaml_sets.load_configurable(str(main))
+    assert yaml_sets.configurable_identifiers(cnf, "c") == ["agg_id_9"]
 
 
 def test_source_defs_uniqueness(tmp_path):

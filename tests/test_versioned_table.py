@@ -90,7 +90,7 @@ def test_streaming_append_exactly_once(spark, tmp_path):
 
     # redelivered epoch is a no-op (manifest chain carries the epoch)
     v_before = VT.current_version(path)
-    assert VT.append_batch_exactly_once(events.limit(3), path, epoch=0) is None
+    assert VT.append(events.limit(3), path, epoch=0) is None
     assert VT.current_version(path) == v_before
     assert VT.read(spark, path).count() == events.count()
 
@@ -120,7 +120,7 @@ def test_transactional_merge_upserts(spark, tmp_path):
     VT.create(base, path)
     updates = spark.createDataFrame(
         [(3, "new"), (4, "new"), (99, "new")], "id LONG, tag STRING")
-    VT.merge(spark, updates, path, key="id")
+    VT.merge_keys(spark, updates, path, key="id")
     got = {r["id"]: r["tag"] for r in VT.read(spark, path).collect()}
     assert got == {0: "old", 1: "old", 2: "old",
                    3: "new", 4: "new", 99: "new"}
@@ -161,7 +161,7 @@ def test_table_changes_between_snapshots(spark, tmp_path):
     path = str(tmp_path / "tbl")
     VT.create(spark.range(5).select(
         F.col("id"), F.lit("old").alias("tag")), path)
-    VT.merge(spark, spark.createDataFrame(
+    VT.merge_keys(spark, spark.createDataFrame(
         [(3, "new"), (99, "new")], "id LONG, tag STRING"), path, key="id")
     feed = {(r["id"], r["tag"], r["_change"])
             for r in VT.table_changes(spark, path, 0,
@@ -207,7 +207,7 @@ def test_incremental_aggregate_matches_recompute(spark, tmp_path):
     VT.append(spark.range(10, 16).select(
         (F.col("id") % 3).alias("g"), F.col("id").cast("double").alias("x")),
         path)
-    VT.merge(spark, spark.range(3).select(
+    VT.merge_keys(spark, spark.range(3).select(
         (F.lit(0)).cast("long").alias("g"),
         F.lit(500.0).alias("x")), path, key="g")  # replaces ALL g=0 rows
     state = VT.refresh_aggregate(spark, path, state, "g", "x")
@@ -332,7 +332,7 @@ def test_model_based_random_op_sequences(spark, tmp_path):
             elif op == "merge":
                 keys = rng.sample(sorted(model), k=min(2, len(model)))
                 rows = [(k, f"m{step}") for k in keys]
-                VT.merge(spark, spark.createDataFrame(
+                VT.merge_keys(spark, spark.createDataFrame(
                     rows, "id LONG, tag STRING"), path, key="id")
                 model.update(dict(rows))
             elif op == "delete" and model:
@@ -356,15 +356,15 @@ def test_streaming_replay_skips_after_vacuum(spark, tmp_path):
     path = str(tmp_path / "tbl")
     df = spark.range(3).select(F.col("id"), F.lit("x").alias("tag"))
     VT.create(df, path)
-    assert VT.append_batch_exactly_once(df, path, epoch=0) == 1
-    assert VT.append_batch_exactly_once(df, path, epoch=1) == 2
+    assert VT.append(df, path, epoch=0) == 1
+    assert VT.append(df, path, epoch=1) == 2
     VT.vacuum(path, keep_last=1)
     assert VT.versions(path) == [2]
     # replayed epochs: detected from the head manifest alone
-    assert VT.append_batch_exactly_once(df, path, epoch=0) is None
-    assert VT.append_batch_exactly_once(df, path, epoch=1) is None
+    assert VT.append(df, path, epoch=0) is None
+    assert VT.append(df, path, epoch=1) is None
     # a genuinely new epoch still appends
-    assert VT.append_batch_exactly_once(df, path, epoch=2) == 3
+    assert VT.append(df, path, epoch=2) == 3
     assert VT.read(spark, path).count() == 12
 
 
@@ -374,10 +374,10 @@ def test_epoch_memory_survives_other_ops(spark, tmp_path):
     path = str(tmp_path / "tbl")
     df = spark.range(4).select(F.col("id"), F.lit("x").alias("tag"))
     VT.create(df, path)
-    VT.append_batch_exactly_once(df, path, epoch=7)
+    VT.append(df, path, epoch=7)
     VT.compact(spark, path, target_files=1)
     VT.append(df, path)
-    assert VT.append_batch_exactly_once(df, path, epoch=7) is None
+    assert VT.append(df, path, epoch=7) is None
 
 
 def test_abandoned_claim_does_not_wedge_table(spark, tmp_path):
@@ -492,11 +492,16 @@ def test_schema_evolution_add_column(spark, table):
 
 
 def test_schema_evolution_guards(spark, table):
-    # undeclared drift through plain append is refused
+    # undeclared drift through plain append is refused, and a refused
+    # stream batch does not record its epoch
+    drift = spark.range(3).select(
+        F.col("id"), F.lit("x").alias("tag"), F.lit(1).alias("sneaky"))
     with pytest.raises(VT.SchemaEvolutionError, match="drift"):
-        VT.append(spark.range(3).select(
-            F.col("id"), F.lit("x").alias("tag"),
-            F.lit(1).alias("sneaky")), table)
+        VT.append(drift, table)
+    with pytest.raises(VT.SchemaEvolutionError, match="drift"):
+        VT.append(drift, table, epoch=5)
+    assert not VT.epoch_committed(table, 5)
+    assert VT.current_version(table) == 0
     # retyping an existing column is refused
     with pytest.raises(VT.SchemaEvolutionError, match="type conflict"):
         VT.append_evolve(spark.range(3).select(
@@ -638,3 +643,45 @@ def test_history_and_files_metadata_tables(spark, table):
         assert r["bytes"] and r["bytes"] > 0
         assert r["md5"] and len(r["md5"]) == 32
         assert r["zone_maps"] is not None
+
+
+def test_merge_on_another_key_keeps_deleted_rows_deleted(spark, tmp_path):
+    """The delete vectors are keyed on ``id``; a merge keyed on ``code``
+    must still anti-join them on ``id`` before it clears them."""
+    path = str(tmp_path / "tbl")
+    VT.create(spark.range(10).select(
+        F.col("id"), (F.col("id") + 100).alias("code")), path)
+    VT.delete_keys(spark, path, "id",
+                   spark.createDataFrame([(3,), (7,)], "id LONG"))
+    VT.merge_keys(spark, spark.createDataFrame(
+        [(50, 105)], "id LONG, code LONG"), path, key="code")
+    assert sorted(r["id"] for r in VT.read(spark, path).collect()) \
+        == [0, 1, 2, 4, 6, 8, 9, 50]
+
+
+def test_merge_keeps_blooms_of_untouched_files(spark, tmp_path):
+    """A file's bloom stays valid while the file is listed, so a lookup
+    after a merge still skips the untouched file."""
+    path = str(tmp_path / "tbl")
+    VT.create(spark.range(0, 100).select(
+        F.col("id"), F.lit("a").alias("tag")).coalesce(1), path)
+    VT.append(spark.range(1000, 1100).select(
+        F.col("id"), F.lit("b").alias("tag")).coalesce(1), path)
+    assert VT.build_blooms(spark, path, 1, "id") == 2
+    first = VT.read_manifest(path, 1)["files"][0]
+    v = VT.merge_keys(spark, spark.createDataFrame(
+        [(1099, "m")], "id LONG, tag STRING"), path, key="id")
+    assert VT.read_manifest(path, v)["blooms"] == {
+        "id": {first: VT.read_manifest(path, 1)["blooms"]["id"][first]}}
+    df, total, kept = VT.read_point(spark, path, "id", 1050)
+    assert kept == total - 1          # the bloomed first file is skipped
+    assert [r["tag"] for r in df.collect()] == ["b"]
+
+
+def test_refused_commit_drops_its_staged_checksums(spark, table):
+    df = spark.range(4).select(F.col("id"), F.lit("x").alias("tag"))
+    VT.append(df, table)  # table moves to v1
+    for _ in range(3):
+        with pytest.raises(VT.ConcurrentWriteError):
+            VT.append(df.repartition(2), table, expected_version=0)
+    assert [f for f in VT._STAGED_CHECKSUMS if f.startswith(table)] == []

@@ -3,7 +3,7 @@
 helper and a tuple-arity bug was committed blind and zeroed the round).
 
 No third-party linters are installed in this container, so this is a
-stdlib-only gate:
+stdlib-only gate (plus the YAML parser the package already uses):
 
 1. byte-compile every ``*.py`` under the package, tests/, tools/ and the
    repo root (syntax errors),
@@ -17,7 +17,10 @@ stdlib-only gate:
    ``append`` of an absolute string literal: a tool or test session run
    from another checkout must import the tree it sits in, so it resolves
    the root from ``__file__``,
-5. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
+5. scan of ``tests/data/*.yaml`` for absolute path values: a data file
+   that names another by an absolute path reads that file from one
+   checkout, whichever tree the tests run from,
+6. import ``__spark_entry__`` and assert the 50/50 queries()/oracle_sql()
    contract (the driver's smoke surface).
 
 Exit code 0 = safe to commit. Run: ``python tools/commit_gate.py``.
@@ -26,10 +29,13 @@ Exit code 0 = safe to commit. Run: ``python tools/commit_gate.py``.
 from __future__ import annotations
 
 import ast
+import os
 import pathlib
 import py_compile
 import subprocess
 import sys
+
+from yaml import safe_load
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 PKG = "cessda_cdc_aggregator_oai_pmh_repo_handler_spark"
@@ -159,6 +165,29 @@ def check_literal_sys_path(paths, root: pathlib.Path = REPO) -> list[str]:
     return errs
 
 
+def absolute_yaml_paths(source: str, filename: str) -> list[str]:
+    """String values of a YAML document that are absolute paths."""
+    def walk(v):
+        if isinstance(v, dict):
+            for x in v.values():
+                yield from walk(x)
+        elif isinstance(v, list):
+            for x in v:
+                yield from walk(x)
+        elif isinstance(v, str) and os.path.isabs(v):
+            yield v
+
+    return [f"DATA {filename}: absolute path {v!r} — name it relative to "
+            f"the file" for v in walk(safe_load(source))]
+
+
+def check_data_paths(root: pathlib.Path = REPO) -> list[str]:
+    errs = []
+    for p in sorted((root / "tests" / "data").glob("*.yaml")):
+        errs += absolute_yaml_paths(p.read_text(), str(p))
+    return errs
+
+
 def check_entry_contract() -> list[str]:
     script = (
         "import sys; sys.path.insert(0, %r)\n"
@@ -182,6 +211,7 @@ def main() -> int:
     errs += check_dead_private(paths)
     errs += check_memo_dicts(paths)
     errs += check_literal_sys_path(paths)
+    errs += check_data_paths()
     errs += check_entry_contract()
     for e in errs:
         print(e)
